@@ -1,5 +1,11 @@
 package graft.operators
 
+import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+
+import scala.concurrent.Await
+import scala.concurrent.duration.{Duration, FiniteDuration}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, SubqueryAlias, View}
 
@@ -78,27 +84,50 @@ object Lineage {
     * s measured locally). `Dataset.observe` computes the aggregates
     * DURING the pin's own action, so the scalar is free. Aggregates
     * must be aliased, global and distinct-free (the observe
-    * contract). Falls back to an explicit aggregate over the pinned
-    * frame if metric delivery ever fails (defensive: delivery rides
-    * an async listener; verified on localCheckpoint and reliable
-    * checkpoint paths for this Spark, but a pinned-frame aggregate is
-    * always correct). */
+    * contract). Metric delivery rides an async listener (verified on
+    * localCheckpoint and reliable checkpoint paths for this Spark);
+    * if it has not arrived within [[observeWait]] the values come
+    * from an explicit aggregate over the pinned frame instead — always
+    * correct, one job dearer — and [[pinAggFallbacks]] counts it. */
   def pinAgg(df: DataFrame,
-             aggs: (String, org.apache.spark.sql.Column)*): (DataFrame, Map[String, Any]) = {
+             aggs: (String, org.apache.spark.sql.Column)*): (DataFrame, Map[String, Any]) =
+    pinAggWithin(observeWait, df, aggs: _*)
+
+  /** Longest wait for a pin's observed aggregates before [[pinAgg]]
+    * falls back: bounds the stall per call (a loop round or a
+    * streaming trigger) if observe delivery ever fails. */
+  val observeWait: FiniteDuration = FiniteDuration(10, "s")
+
+  private val fallbacks = new AtomicLong(0L)
+  private val fallbackLogged = new AtomicBoolean(false)
+
+  /** Number of [[pinAgg]] calls (process-wide) whose observed metrics
+    * missed [[observeWait]] and were recomputed over the pinned frame. */
+  def pinAggFallbacks: Long = fallbacks.get()
+
+  /** [[pinAgg]] with the delivery wait as a parameter. A zero wait
+    * never looks at the observation and always takes the fallback. */
+  private[graft] def pinAggWithin(wait: FiniteDuration, df: DataFrame,
+      aggs: (String, org.apache.spark.sql.Column)*): (DataFrame, Map[String, Any]) = {
     require(aggs.nonEmpty, "pinAgg needs >= 1 aggregate")
     val names = aggs.map(_._1)
     val aliased = aggs.map { case (n, c) => c.as(n) }
     val obs = org.apache.spark.sql.Observation()
     val pinned = pin(df.observe(obs, aliased.head, aliased.tail: _*))
+    val delivered = wait > Duration.Zero &&
+      (try { Await.ready(obs.future, wait); true }
+       catch { case _: TimeoutException => false })
     val vals: Map[String, Any] =
-      try {
-        scala.concurrent.Await.ready(obs.future,
-          scala.concurrent.duration.Duration(60, "s"))
-        names.map(n => (n, obs.get(n))).toMap
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          val r = pinned.agg(aliased.head, aliased.tail: _*).head()
-          names.zipWithIndex.map { case (n, i) => (n, r.get(i)) }.toMap
+      if (delivered) names.map(n => (n, obs.get(n))).toMap
+      else {
+        fallbacks.incrementAndGet()
+        if (fallbackLogged.compareAndSet(false, true))
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"pinAgg: observed metrics not delivered within $wait; " +
+              "aggregating the pinned frame instead (logged once, " +
+              "counted in Lineage.pinAggFallbacks)")
+        val r = pinned.agg(aliased.head, aliased.tail: _*).head()
+        names.zipWithIndex.map { case (n, i) => (n, r.get(i)) }.toMap
       }
     (pinned, vals)
   }

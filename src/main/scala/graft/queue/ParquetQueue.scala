@@ -159,6 +159,10 @@ class ParquetQueue(
     StructField("lifetime_ms", LongType, nullable = false) ::
     schema.sparkSchema.fields.toList)
 
+  /** Envelope + the `batch` (segment first-seq) partition column: the
+    * schema every read of `data/` returns. */
+  private val partitioned: StructType = envelope.add(StructField("batch", LongType))
+
   /** Next sequence number to be assigned (== total rows ever pushed). */
   def highwater: Long =
     if (Files.exists(highwaterFile))
@@ -174,13 +178,15 @@ class ParquetQueue(
 
   /** Append a batch (the journal-append primitive, unbounded like the
     * reference's `JournaledFile.push`; the capacity-honoring publisher
-    * API is [[tryPush]]/[[pushWait]]). Sequence numbers are assigned
-    * per-partition from a counted offset table (classic zipWithIndex
-    * two-pass) — no global shuffle, scales to any batch size. The
-    * validated payload is persisted for the duration of the push so the
-    * source is computed exactly once (a non-deterministic source can't
-    * disagree between the count and the written rows). Returns the
-    * number pushed.
+    * API is [[tryPush]]/[[pushWait]]). Two Spark jobs, no global
+    * shuffle, any batch size: the validated payload is persisted and
+    * one job collects its per-partition row counts, which give both
+    * the number pushed and each partition's first seq; the write then
+    * numbers each partition's rows from its offset over the same
+    * cached rows (zipWithIndex's algorithm with its count reused).
+    * The source is computed exactly once, so a non-deterministic
+    * source can't disagree between the count and the written rows.
+    * Returns the number pushed.
     */
   def push(df: DataFrame, lifetimeMs: Long = -1L,
            nowMs: Long = System.currentTimeMillis()): Long = mutex.synchronized {
@@ -189,10 +195,17 @@ class ParquetQueue(
     val payload = schema.validate(df).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val first = highwater
-      val n = payload.count() // materializes the cache; one source pass
+      val rows = payload.rdd
+      // materializes the cache; one source pass
+      val counts = rows.mapPartitions(it => Iterator.single(it.foldLeft(0L)((c, _) => c + 1)))
+        .collect()
+      val n = counts.sum
       if (n > 0) {
-        val rdd = payload.rdd.zipWithIndex().map { case (row, i) =>
-          Row.fromSeq((first + i) +: nowMs +: lifetimeMs +: row.toSeq)
+        val starts = counts.scanLeft(first)(_ + _)
+        val rdd = rows.mapPartitionsWithIndex { (p, it) =>
+          it.zip(Iterator.iterate(starts(p))(_ + 1)).map { case (row, seq) =>
+            Row.fromSeq(seq +: nowMs +: lifetimeMs +: row.toSeq)
+          }
         }
         // Two-phase visibility: the segment is written under _staging
         // (overwrite clears any orphan of a crashed predecessor at the
@@ -344,7 +357,7 @@ class ParquetQueue(
   def journal: DataFrame =
     if (!hasData) spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],
-      envelope.add(StructField("batch", LongType)))
+      partitioned)
     else spark.read.option("basePath", dataDir).parquet(dataDir)
       .filter(col("seq") < highwater) // ignore torn/uncommitted appends
 
@@ -620,7 +633,10 @@ class ParquetQueue(
     * loop) becomes a declarative stream. */
   def readStream(maxBatchesPerTrigger: Int = 8): DataFrame =
     spark.readStream
-      .schema(envelope)
+      // the `batch` partition column is declared too: a stream started
+      // on an empty queue cannot infer it, and would then fail on the
+      // first segment's (envelope + batch) rows
+      .schema(partitioned)
       .option("basePath", dataDir)
       .option("maxFilesPerTrigger", maxBatchesPerTrigger)
       .parquet(dataDir)

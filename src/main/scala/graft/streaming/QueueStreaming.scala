@@ -1471,14 +1471,17 @@ object QueueStreaming {
       : org.apache.spark.sql.streaming.StreamingQuery =
     incoming.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Dedup
+        import graft.operators.{Dedup, Lineage}
         val b = batch.toDF()
         val corpusDups = Dedup
           .minhashAgainstTable(b, idCol, textCol, sigTable,
             k = k, bands = bands, minJaccard = minJaccard)
           .filter(col("incoming_id") =!= col("corpus_id"))
           .select(col("incoming_id").as("__dup_id")).distinct()
-        val fresh = b.join(corpusDups, b(idCol) === col("__dup_id"), "left_anti")
+        // pinned: the within-batch pairs and the removal both read it,
+        // so the corpus probe runs once
+        val fresh = Lineage.pin(
+          b.join(corpusDups, b(idCol) === col("__dup_id"), "left_anti"))
         val withinPairs = Dedup.minhashPairs(fresh, idCol, textCol,
           k = k, bands = bands, minJaccard = minJaccard)
         val kept = Dedup.removeNearDups(fresh, idCol, withinPairs)
@@ -1508,9 +1511,16 @@ object QueueStreaming {
     * funnel frame (stage_idx, stage, n_docs) commits beside the data
     * (`outPath/funnel/batch=N`) — the L111 observability contract,
     * summable across batches because every stage statistic is a
-    * plain count. Replay-safe: both outputs are own-partition
-    * overwrites; a replayed signature append collapses in the probe's
-    * candidate distinct. Mixture weights and packing stay downstream
+    * plain count. Each stage frame is computed once per trigger: the
+    * batch, the Gopher survivors, the dedup survivors and the final
+    * survivors are pinned with [[graft.operators.Lineage.pinAgg]],
+    * whose pin action also observes the stage's row count (so the
+    * funnel costs no count job of its own), and the probe's
+    * corpus-fresh rows are pinned before the within-batch pairs and
+    * the removal read them (so the signature table is scanned in one
+    * SQL execution per trigger). Replay-safe: both outputs are
+    * own-partition overwrites; a replayed signature append collapses
+    * in the probe's candidate distinct. Mixture weights and packing stay downstream
     * consumers ([[mixtureReweightStream]], [[packStream]]) — they are
     * corpus-global decisions, not per-doc gates. */
   def pipelineStream(docs: DataFrame, idCol: String, textCol: String,
@@ -1524,50 +1534,46 @@ object QueueStreaming {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.{Curate, Dedup}
+        import graft.operators.{Curate, Dedup, Lineage}
         val spark = batch.sparkSession
-        val b = batch.toDF().transform(graft.operators.Lineage.pin)
+        def pinCount(df: DataFrame): (DataFrame, Long) = {
+          val (pinned, vals) = Lineage.pinAgg(df, "n" -> count(lit(1)))
+          (pinned, vals("n").asInstanceOf[Long])
+        }
+        val (b, nIngest) = pinCount(batch.toDF())
         // stage 1: Gopher battery
         val keep = Curate.gopherFlags(b, idCol, textCol,
             stopWords = stopWords)
           .filter(col("keep") === 1).select(col("doc_id").as(idCol))
-        val g = b.join(keep, Seq(idCol))
-          .transform(graft.operators.Lineage.pin)
-        // stage 2: near-dup ingest (corpus state probe + within-batch)
+        val (g, nGopher) = pinCount(b.join(keep, Seq(idCol)))
+        // stage 2: near-dup ingest (corpus state probe + within-batch);
+        // `fresh` is pinned so the probe runs in one execution
         val corpusDups = Dedup
           .minhashAgainstTable(g, idCol, textCol, sigTable,
             k = k, bands = bands, minJaccard = minJaccard)
           .filter(col("incoming_id") =!= col("corpus_id"))
           .select(col("incoming_id").as("__dup_id")).distinct()
-        val fresh = g.join(corpusDups, g(idCol) === col("__dup_id"),
-          "left_anti")
-        val deduped = Dedup.removeNearDups(fresh, idCol,
-            Dedup.minhashPairs(fresh, idCol, textCol,
-              k = k, bands = bands, minJaccard = minJaccard))
-          .transform(graft.operators.Lineage.pin)
+        val fresh = Lineage.pin(g.join(corpusDups,
+          g(idCol) === col("__dup_id"), "left_anti"))
+        val (deduped, nDeduped) = pinCount(Dedup.removeNearDups(fresh, idCol,
+          Dedup.minhashPairs(fresh, idCol, textCol,
+            k = k, bands = bands, minJaccard = minJaccard)))
         // stage 3: winnow decontamination vs the frozen suite
         val flagged = Dedup.winnowedAgainst(deduped, idCol, textCol,
             eval, idCol, textCol, winK, winW, minShared, maxDf)
           .select(col("id").as("__c_id")).distinct()
-        val kept = deduped
-          .join(flagged, deduped(idCol) === col("__c_id"), "left_anti")
-          .persist()
-        try {
-          kept.write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
-          Dedup.appendSignatures(kept, idCol, textCol, sigTable,
-            k = k, bands = bands, buckets = buckets)
-          // funnel accounting: one bounded action over the pinned
-          // stage frames (each already materialized above)
-          val counts = Seq(
-            (0L, "ingest", b.count()), (1L, "gopher", g.count()),
-            (2L, "dedup_ingest", deduped.count()),
-            (3L, "decontam_winnow", kept.count()))
-          import spark.implicits._
-          counts.toDF("stage_idx", "stage", "n_docs")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/funnel/batch=$batchId")
-        } finally { kept.unpersist(); () }
+        val (kept, nKept) = pinCount(deduped
+          .join(flagged, deduped(idCol) === col("__c_id"), "left_anti"))
+        kept.write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
+        Dedup.appendSignatures(kept, idCol, textCol, sigTable,
+          k = k, bands = bands, buckets = buckets)
+        import spark.implicits._
+        Seq((0L, "ingest", nIngest), (1L, "gopher", nGopher),
+            (2L, "dedup_ingest", nDeduped), (3L, "decontam_winnow", nKept))
+          .toDF("stage_idx", "stage", "n_docs")
+          .coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$outPath/funnel/batch=$batchId")
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1593,15 +1599,17 @@ object QueueStreaming {
       : org.apache.spark.sql.streaming.StreamingQuery =
     incoming.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Dedup
+        import graft.operators.{Dedup, Lineage}
         val b = batch.toDF()
         val corpusHits = Dedup
           .containedAgainstTable(b, idCol, textCol, stateTable,
             num = num, den = den, shingleN = shingleN)
           .filter(col("incoming_id") =!= col("corpus_id"))
           .select(col("incoming_id").as("__dup_id")).distinct()
-        val fresh = b.join(corpusHits, b(idCol) === col("__dup_id"),
-          "left_anti")
+        // pinned: the pair probe and the removal both read it, so the
+        // state probe runs once
+        val fresh = Lineage.pin(b.join(corpusHits,
+          b(idCol) === col("__dup_id"), "left_anti"))
         val kept = Dedup.removeContained(fresh, idCol, textCol,
           num = num, den = den, shingleN = shingleN).persist()
         try {
@@ -2066,7 +2074,7 @@ object QueueStreaming {
       : org.apache.spark.sql.streaming.StreamingQuery =
     incoming.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Dedup
+        import graft.operators.{Dedup, Lineage}
         val b = batch.toDF()
         val corpusHits = Dedup
           .winnowAgainstTable(b, idCol, textCol, stateTable,

@@ -37,6 +37,21 @@ class ObserveSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("pinAgg fallback aggregates the pinned frame: same values, counted") {
+    import graft.operators.Lineage
+    val d = spark.range(0, 100, 1, 4).toDF("x")
+    val aggs = Seq("n" -> count(lit(1)), "s" -> sum(col("x")))
+    val (p1, observed) = Lineage.pinAgg(d, aggs: _*)
+    val before = Lineage.pinAggFallbacks
+    // a zero wait skips the observation: the fallback path
+    val (p2, fallback) = Lineage.pinAggWithin(
+      scala.concurrent.duration.Duration.Zero, d, aggs: _*)
+    assert(observed == Map("n" -> 100L, "s" -> 4950L))
+    assert(fallback == observed)
+    assert(Lineage.pinAggFallbacks >= before + 1, "fallback not counted")
+    assert(p2.collect().toSet == p1.collect().toSet)
+  }
+
   test("extra aggregate columns ride the same pass") {
     import spark.implicits._
     val d = Seq(("a", 2L), ("b", 3L), ("c", 5L)).toDF("k", "v")

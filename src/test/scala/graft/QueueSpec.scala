@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.functions.col
 
 import graft.queue.{ParquetQueue, TypedQueue}
 import graft.schema.{GraftSchema, GraftType}
@@ -82,6 +85,46 @@ class QueueSpec extends SparkSpec {
     query.awaitTermination(60000)
     val seen = spark.sql("SELECT id FROM qsub ORDER BY seq").as[Long].collect()
     assert(seen.toSeq == Seq(1L, 2L, 3L))
+    q.dispose()
+  }
+
+  test("push numbers a multi-partition frame with empty partitions contiguously, in two jobs") {
+    val q = fresh()
+    q.push(Seq((0L, "first")).toDF("id", "text"))
+    val hw = q.highwater
+    // 5 rows over 8 slices: several partitions are empty
+    val df = spark.sparkContext.parallelize((1L to 5L).map(i => (i, s"t$i")), 8)
+      .toDF("id", "text")
+    val sc = spark.sparkContext
+    val group = s"qspec-push-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "push")
+    val (n, starts) = try startsDuring(q.push(df)) finally sc.clearJobGroup()
+    val jobs = starts.count {
+      case j: SparkListenerJobStart => j.properties.getProperty("spark.jobGroup.id") == group
+      case _ => false
+    }
+    assert(n == 5L && q.highwater == hw + n)
+    assert(jobs == 2, s"push ran $jobs Spark jobs, expected 2")
+    val rows = q.journal.filter(col("batch") === hw)
+      .select("seq", "id").as[(Long, Long)].collect().sortBy(_._1).toSeq
+    assert(rows.map(_._1) == (hw until hw + n), s"seqs not contiguous from $hw: $rows")
+    assert(rows.map(_._2) == (1L to 5L), "seq order follows partition order")
+    q.dispose()
+  }
+
+  test("a 0-row push writes nothing and leaves the highwater unchanged") {
+    val q = fresh()
+    q.push(Seq((1L, "a")).toDF("id", "text"))
+    def listing(dir: String) = {
+      val s = Files.walk(Paths.get(q.root, dir))
+      try s.toArray.map(_.toString).sorted.toSeq finally s.close()
+    }
+    val (data, staging) = (listing("data"), listing("_staging"))
+    assert(q.push(Seq.empty[(Long, String)].toDF("id", "text")) == 0L)
+    assert(q.highwater == 1L)
+    assert(listing("data") == data && listing("_staging") == staging,
+      "an empty push must not write a segment")
+    assert(q.pop(10).map(_.getLong(0)) == Seq(1L))
     q.dispose()
   }
 

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +19,40 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   def table(name: String): org.apache.spark.sql.DataFrame =
     graft.queries.RelationalQueries.t(spark, sfDir, name)
+
+  /** `body`'s result and the job and SQL-execution starts posted while
+    * it ran, from every thread and suite (callers filter them, e.g. by
+    * job group). A marker job in its own group runs after `body`; a
+    * listener receives events in post order, so the marker's arrival
+    * means every earlier start has been seen. */
+  def startsDuring[T](body: => T): (T, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${java.util.UUID.randomUUID}"
+    def isMarker(e: SparkListenerEvent) = e match {
+      case j: SparkListenerJobStart =>
+        Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == marker)
+      case _ => false
+    }
+    val seen = new LinkedBlockingQueue[SparkListenerEvent]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => seen.put(x)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val got = Seq.newBuilder[SparkListenerEvent]
+      var e = seen.poll(120, TimeUnit.SECONDS)
+      while (e != null && !isMarker(e)) { got += e; e = seen.poll(120, TimeUnit.SECONDS) }
+      assert(e != null, "listener bus did not deliver the marker job")
+      (out, got.result())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

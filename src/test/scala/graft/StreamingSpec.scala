@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -126,6 +128,28 @@ class StreamingSpec extends SparkSpec {
     // straggler emitted alone (duration 0); open session kept its
     // bounds (500ms, events 1+2)
     assert(sessions.toSeq == Seq(Session(7L, 1L, 9.0, 0L), Session(7L, 2L, 3.0, 500L)))
+  }
+
+  private def planNodes(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+    p +: p.children.flatMap(planNodes)
+
+  test("queue subscriber started on an empty queue receives later pushes") {
+    import graft.queue.ParquetQueue
+    import graft.schema.{GraftSchema, GraftType}
+    val schema = GraftSchema(("id", GraftType.INTEGER), ("text", GraftType.TEXT))
+    val q = new ParquetQueue(spark,
+      Files.createTempDirectory("qempty").toString, schema)
+    val name = s"qempty_${System.nanoTime()}"
+    val s = q.readStream().writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", Files.createTempDirectory("qempty_ckpt").toString)
+      .start()
+    try {
+      q.push(Seq((1L, "a"), (2L, "b")).toDF("id", "text"))
+      s.processAllAvailable()
+      val got = spark.sql(s"SELECT id, batch FROM $name ORDER BY seq")
+        .as[(Long, Long)].collect().toSeq
+      assert(got == Seq((1L, 0L), (2L, 0L)), s"rows pushed after start: $got")
+    } finally { s.stop(); q.dispose() }
   }
 
   test("queue subscriber is exactly-once across stream restarts") {
@@ -441,25 +465,28 @@ class StreamingSpec extends SparkSpec {
       val mem = MemoryStream[(Long, String)]
       val out = Files.createTempDirectory("pipe_out").toString
       val ckpt = Files.createTempDirectory("pipe_ckpt").toString
-      val q = QueueStreaming.pipelineStream(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", eval,
-        "pipe_sigs", out, ckpt, stopWords = Seq("the", "a"))
-      mem.addData(
-        (10L, aText),                 // clean: survives all stages
-        (11L, "too short"),           // gopher-fail (< 50 words)
-        (12L, aText),                 // within-batch dup of 10
-        (13L, gopherOk("corp")))      // dup of the accepted corpus
-      q.processAllAvailable()
-      mem.addData(
-        (20L, aText),                 // cross-trigger dup of 10
-        // gopher-passing text QUOTING the eval passage verbatim:
-        // the winnow gate must flag it even though it near-dups
-        // nothing (shared-passage, not resemblance)
-        (21L, gopherOk("quoter").split(" ").take(30).mkString(" ") +
-          " " + evalPassage + " the a tailword1 tailword2"),
-        (22L, gopherOk("fresh")))     // clean: survives
-      q.processAllAvailable()
-      q.stop()
+      val (q, starts) = startsDuring {
+        val q = QueueStreaming.pipelineStream(
+          mem.toDF().toDF("doc_id", "text"), "doc_id", "text", eval,
+          "pipe_sigs", out, ckpt, stopWords = Seq("the", "a"))
+        mem.addData(
+          (10L, aText),                 // clean: survives all stages
+          (11L, "too short"),           // gopher-fail (< 50 words)
+          (12L, aText),                 // within-batch dup of 10
+          (13L, gopherOk("corp")))      // dup of the accepted corpus
+        q.processAllAvailable()
+        mem.addData(
+          (20L, aText),                 // cross-trigger dup of 10
+          // gopher-passing text QUOTING the eval passage verbatim:
+          // the winnow gate must flag it even though it near-dups
+          // nothing (shared-passage, not resemblance)
+          (21L, gopherOk("quoter").split(" ").take(30).mkString(" ") +
+            " " + evalPassage + " the a tailword1 tailword2"),
+          (22L, gopherOk("fresh")))     // clean: survives
+        q.processAllAvailable()
+        q.stop()
+        q
+      }
       val kept = spark.read.parquet(s"$out/data")
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(kept == Set(10L, 22L),
@@ -484,6 +511,24 @@ class StreamingSpec extends SparkSpec {
         .select("id").distinct().collect().map(_.getLong(0)).toSet
       assert(!sigIds.contains(21L),
         "rejected docs must not extend the signature state")
+      // structure: the stream's executions (job group = its run id,
+      // trigger from the job description) scan the signature table
+      // once per trigger, and none is a standalone global count
+      val mine = starts.collect {
+        case e: SparkListenerSQLExecutionStart
+          if e.jobGroupId.contains(q.runId.toString) => e
+      }
+      def trigger(e: SparkListenerSQLExecutionStart) =
+        "batch = (\\d+)".r.findFirstMatchIn(e.description).map(_.group(1).toInt)
+      val sigScans = mine.filter(e => planNodes(e.sparkPlanInfo).exists(n =>
+          n.nodeName.contains("Scan") && n.simpleString.contains("pipe_sigs")))
+        .groupBy(trigger).map { case (t, es) => t -> es.size }
+      assert(sigScans == Map(Some(0) -> 1, Some(1) -> 1),
+        s"signature-table scans per trigger: $sigScans")
+      val counts = mine.filter(e => planNodes(e.sparkPlanInfo).exists(n =>
+        n.nodeName == "HashAggregate" &&
+          n.simpleString.contains("keys=[], functions=[count(1)]")))
+      assert(counts.size == 0, "standalone count executions")
     } finally spark.sql("DROP TABLE IF EXISTS pipe_sigs")
   }
 
