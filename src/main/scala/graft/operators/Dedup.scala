@@ -879,12 +879,6 @@ object Dedup {
       var iter = 0
       val nNodes = initVals("__n").asInstanceOf[Long]
       var converged = nNodes == 0L
-      // pinned label frames carry no stats, so the round's join would
-      // plan sort-merge (exchanges of pure latency on a node-sized
-      // table). Size once and broadcast under the LinkRank threshold;
-      // past it the rounds keep the shuffle plan.
-      val small = nNodes <= 1000000L
-      def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
       // superseded rounds' checkpoint blocks are reclaimed by the
       // ContextCleaner once the driver reference drops (weak-ref GC);
       // localCheckpoint blocks unconditionally, reliable checkpoint
@@ -897,7 +891,7 @@ object Dedup {
         // the moved-flag reference) arrives through the union branch
         // of the pinned label table — no second edge-table join, no
         // synthetic self-loop rows inflating the edge list.
-        val cand = edges.join(hinted(labels), edges("dst") === labels("id"))
+        val cand = edges.join(labels, edges("dst") === labels("id"))
           .select(col("src"), col("lbl"), lit(false).as("__self"))
           .unionAll(labels.select(col("id").as("src"), col("lbl"),
             lit(true).as("__self")))
@@ -918,7 +912,7 @@ object Dedup {
         // round pin's own action (pinAgg) instead of a trailing
         // count job
         val (next, roundVals) = graft.operators.Lineage.pinAgg(
-          cand.join(hinted(lbl2), cand("nlbl") === lbl2("__cid"), "left")
+          cand.join(lbl2, cand("nlbl") === lbl2("__cid"), "left")
             .select(col("src").as("id"),
               least(col("nlbl"), coalesce(col("__clbl"), col("nlbl"))).as("lbl"),
               (least(col("nlbl"), coalesce(col("__clbl"), col("nlbl")))
@@ -1086,18 +1080,11 @@ object Dedup {
     // is the semantics, so duplicate edge rows would change counts
     val edges = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .distinct().transform(graft.operators.Lineage.pin)
-    // node count rides the init pin (r17) and gates the broadcast
-    // hints — pinned frames carry no stats, so the per-round label
-    // join otherwise planned sort-merge on a node-sized table
-    val (labels0, lv) = graft.operators.Lineage.pinAgg(
-      edges.select(col("u").as("id")).distinct().withColumn("lab", col("id")),
-      ("__n", count(lit(1))))
-    var labels = labels0
-    val small = lv("__n").asInstanceOf[Long] <= 1000000L
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    var labels = edges.select(col("u").as("id")).distinct()
+      .withColumn("lab", col("id")).transform(graft.operators.Lineage.pin)
     for (_ <- 1 to rounds) {
       val nbr = edges
-        .join(hinted(labels.withColumnRenamed("id", "v")), Seq("v"))
+        .join(labels.withColumnRenamed("id", "v"), Seq("v"))
         .select(col("u").as("id"), col("lab"))
       val votes = nbr.unionAll(labels.select("id", "lab"))
         .groupBy("id", "lab").agg(count(lit(1)).as("c"))

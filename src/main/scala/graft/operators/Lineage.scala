@@ -8,6 +8,8 @@ import scala.concurrent.duration.{Duration, FiniteDuration}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graft.Bridge
 
 /** Lineage guard for multi-reference operators.
   *
@@ -29,32 +31,36 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
   * blocks live on executors and die with them — lineage is truncated,
   * so an executor loss fails the job instead of recomputing. On a real
   * cluster prefer reliable `checkpoint()` for long-running jobs by
-  * setting [[Lineage.useReliableCheckpoint]] (requires
-  * `spark.sparkContext.setCheckpointDir`). local[32] has no executor
-  * loss, so the default stays local.
+  * setting the session conf `graft.checkpoint.reliable=true`
+  * (requires `spark.sparkContext.setCheckpointDir`). local[32] has no
+  * executor loss, so the default stays local.
+  *
+  * Stats contract: every pin (plain, [[pinAgg]], [[pinDerived]], either
+  * checkpoint path) returns a leaf carrying the EXACT row count of the
+  * materialization, counted during the pin's own action, and
+  * `sizeInBytes = rows × EstimationUtils.getSizePerRow(output)` — the
+  * row-width model the optimizer applies above every other leaf. So
+  * Spark's own `autoBroadcastJoinThreshold` (and AQE above it) sizes
+  * joins against pinned frames; no operator hand-sizes a broadcast.
   */
 object Lineage {
 
-  /** Opt-in: route [[pinDerived]] through reliable `checkpoint()`
-    * instead of `localCheckpoint()` (set once at app start; requires a
-    * checkpoint dir). Equivalent to the session conf knob
-    * `graft.checkpoint.reliable=true`. */
-  @volatile var useReliableCheckpoint: Boolean = false
-
   /** Round pin for the engine's iterative operators (LPA, k-core,
     * Lloyd, SGNS, PageRank, MW reweight, greedy packing…): cut
-    * lineage eagerly so round t+1 never re-executes round t. Honors
-    * `graft.checkpoint.reliable`: when the session conf sets it true
-    * (or [[useReliableCheckpoint]] is set) rounds checkpoint RELIABLY
-    * to the configured checkpoint dir, so on a real cluster an
-    * executor loss recomputes the round from storage instead of
-    * failing the job — localCheckpoint blocks live on executors and
-    * die with them. local[*] keeps the localCheckpoint default (no
-    * executor loss, no distributed-FS round-trip per round). */
-  def pin(df: DataFrame): DataFrame = {
-    val reliable = useReliableCheckpoint ||
-      df.sparkSession.conf.getOption("graft.checkpoint.reliable")
-        .exists(_.equalsIgnoreCase("true"))
+    * lineage eagerly so round t+1 never re-executes round t. One Spark
+    * job; the leaf carries exact stats (see the stats contract above).
+    * Honors `graft.checkpoint.reliable`: when the session conf sets it
+    * true, rounds checkpoint RELIABLY to the configured checkpoint dir,
+    * so on a real cluster an executor loss recomputes the round from
+    * storage instead of failing the job — localCheckpoint blocks live
+    * on executors and die with them. local[*] keeps the
+    * localCheckpoint default (no executor loss, no distributed-FS
+    * round-trip per round). */
+  def pin(df: DataFrame): DataFrame = pinAgg(df)._1
+
+  private def checkpoint(df: DataFrame): DataFrame = {
+    val reliable = df.sparkSession.conf.getOption("graft.checkpoint.reliable")
+      .exists(_.equalsIgnoreCase("true"))
     if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "graft.checkpoint.reliable=true requires " +
@@ -84,7 +90,8 @@ object Lineage {
     * s measured locally). `Dataset.observe` computes the aggregates
     * DURING the pin's own action, so the scalar is free. Aggregates
     * must be aliased, global and distinct-free (the observe
-    * contract). Metric delivery rides an async listener (verified on
+    * contract). The pin's row count rides the same observation.
+    * Metric delivery rides an async listener (verified on
     * localCheckpoint and reliable checkpoint paths for this Spark);
     * if it has not arrived within [[observeWait]] the values come
     * from an explicit aggregate over the pinned frame instead — always
@@ -105,15 +112,17 @@ object Lineage {
     * missed [[observeWait]] and were recomputed over the pinned frame. */
   def pinAggFallbacks: Long = fallbacks.get()
 
+  private val Rows = "__pin_rows"
+
   /** [[pinAgg]] with the delivery wait as a parameter. A zero wait
     * never looks at the observation and always takes the fallback. */
   private[graft] def pinAggWithin(wait: FiniteDuration, df: DataFrame,
       aggs: (String, org.apache.spark.sql.Column)*): (DataFrame, Map[String, Any]) = {
-    require(aggs.nonEmpty, "pinAgg needs >= 1 aggregate")
-    val names = aggs.map(_._1)
-    val aliased = aggs.map { case (n, c) => c.as(n) }
+    val all = aggs :+ (Rows -> count(lit(1)))
+    val names = all.map(_._1)
+    val aliased = all.map { case (n, c) => c.as(n) }
     val obs = org.apache.spark.sql.Observation()
-    val pinned = pin(df.observe(obs, aliased.head, aliased.tail: _*))
+    val pinned = checkpoint(df.observe(obs, aliased.head, aliased.tail: _*))
     val delivered = wait > Duration.Zero &&
       (try { Await.ready(obs.future, wait); true }
        catch { case _: TimeoutException => false })
@@ -129,7 +138,7 @@ object Lineage {
         val r = pinned.agg(aliased.head, aliased.tail: _*).head()
         names.zipWithIndex.map { case (n, i) => (n, r.get(i)) }.toMap
       }
-    (pinned, vals)
+    (Bridge.withRowCount(pinned, vals(Rows).asInstanceOf[Long]), vals - Rows)
   }
 
   private def scanShaped(p: LogicalPlan): Boolean = p match {

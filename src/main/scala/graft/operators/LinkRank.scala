@@ -125,22 +125,15 @@ object LinkRank {
     val (e, ev) = graft.operators.Lineage.pinAgg(
       if (assumeSummed) raw
       else raw.groupBy("src", "dst").agg(sum("w").as("w")),
-      ("__wmax", max("w")))
-    val wMax = Option(ev("__wmax")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val longSafe = wMax >= 0 &&
-      BigInt(scale) * BigInt(math.max(wMax, 1L)) <= BigInt(Long.MaxValue)
+      ("__wmax", max("w")), ("__wmin", min("w")))
+    val wMax = weightBound(ev, "hits")
+    val longSafe = BigInt(scale) * wMax <= BigInt(Long.MaxValue)
     val prodExpr =
       if (longSafe) "v * w" else "CAST(v AS DECIMAL(38,0)) * w"
-    // node count rides the node-table pin (Lineage.pinAgg, r17)
-    val (nodes, nv) = graft.operators.Lineage.pinAgg(
+    val nodes = graft.operators.Lineage.pin(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
-        .distinct(),
-      ("__n", count(lit(1))))
-    val n = nv("__n").asInstanceOf[Long]
-    require(n > 0, "hits on an empty edge list")
-    val small = n <= 1000000L
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+        .distinct())
     // L1-renormalize a raw (node, v) frame to sum exactly ~scale.
     // Pin the RAW frame first, THEN read its total off the pinned
     // blocks: summing the lazy frame and then checkpointing it would
@@ -170,13 +163,13 @@ object LinkRank {
     var hub = nodes.select(col("node"), lit(scale).as("v"))
     var auth = nodes.select(col("node"), lit(0L).as("v"))
     for (_ <- 1 to iters) {
-      val ar = e.join(hinted(hub), col("src") === hub("node"))
+      val ar = e.join(hub, col("src") === hub("node"))
         .select(col("dst"), expr(prodExpr).as("c"))
         .groupBy("dst")
         .agg(sum(col("c").cast("decimal(38,0)")).cast("decimal(38,0)").as("v"))
         .select(col("dst").as("node"), col("v"))
       auth = renorm(ar)
-      val hr = e.join(hinted(auth), col("dst") === auth("node"))
+      val hr = e.join(auth, col("dst") === auth("node"))
         .select(col("src"), expr(prodExpr).as("c"))
         .groupBy("src")
         .agg(sum(col("c").cast("decimal(38,0)")).cast("decimal(38,0)").as("v"))
@@ -184,11 +177,23 @@ object LinkRank {
       hub = renorm(hr)
     }
     nodes
-      .join(hinted(hub.withColumnRenamed("v", "hub_micro")), Seq("node"), "left")
-      .join(hinted(auth.withColumnRenamed("v", "auth_micro")), Seq("node"), "left")
+      .join(hub.withColumnRenamed("v", "hub_micro"), Seq("node"), "left")
+      .join(auth.withColumnRenamed("v", "auth_micro"), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_micro"), lit(0L)).cast("long").as("hub_micro"),
         coalesce(col("auth_micro"), lit(0L)).cast("long").as("auth_micro"))
+  }
+
+  /** max(w) of the pinned edge list, after the two conditions every
+    * rank path (long or decimal) relies on: at least one weighted edge,
+    * and no negative weight (mass conservation — rank ≤ scale, which
+    * also bounds the long path's products — assumes w ≥ 0). */
+  private def weightBound(ev: Map[String, Any], op: String): Long = {
+    require(ev("__wmax") != null,
+      s"$op on an empty edge list (no edge with a non-null weight)")
+    require(ev("__wmin").asInstanceOf[Long] >= 0,
+      s"$op needs non-negative edge weights, got min ${ev("__wmin")}")
+    ev("__wmax").asInstanceOf[Long]
   }
 
   private def ranked(edges: DataFrame, srcCol: String, dstCol: String,
@@ -215,8 +220,8 @@ object LinkRank {
     val (e, ev) = graft.operators.Lineage.pinAgg(
       if (assumeSummed) raw
       else raw.groupBy("src", "dst").agg(sum("w").as("w")),
-      ("__wmax", max("w")))
-    val wMax = Option(ev("__wmax")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      ("__wmax", max("w")), ("__wmin", min("w")))
+    val wMax = weightBound(ev, "pageRank")
     // r17 (§1.2 per-task work): the per-edge contribution
     // floor(rank·w/outw) ran as DECIMAL(38,0) multiply+divide — a
     // BigDecimal op per edge per round that dominated task time
@@ -227,8 +232,8 @@ object LinkRank {
     // value-identical, only representation changes; the inflow sum is
     // bounded by total mass ≤ scale, so it stays long too. Graphs with
     // weights past the bound keep the widened decimal path.
-    val longSafe = wMax >= 0 &&
-      BigInt(scale) * BigInt(math.max(wMax, 1L)) <= BigInt(Long.MaxValue) &&
+    val longSafe =
+      BigInt(scale) * wMax <= BigInt(Long.MaxValue) &&
       BigInt(dampNum) * BigInt(scale) <= BigInt(Long.MaxValue)
     val contribExpr =
       if (longSafe) "rank * w div outw"
@@ -251,36 +256,28 @@ object LinkRank {
       },
       ("__n", count(lit(1))), ("__ns", sum("seed")))
     val n = nv("__n").asInstanceOf[Long]
-    require(n > 0, "pageRank on an empty edge list")
     val nTeleport = if (seeds.isEmpty) n else nv("__ns").asInstanceOf[Long]
     require(nTeleport > 0, "no seed node present in the graph")
-    val outw = e.groupBy("src").agg(sum("w").as("outw"))
-    // Size-statistics decisions the planner can't make itself
-    // (checkpointed frames carry no stats, and AQE only rescues a join
-    // after a wasted shuffle of the edge list): on a host/domain-
-    // grained graph (n up to ~10^6) the n-row frames — out-weights,
-    // ranks, inflows — all broadcast, so each round is ONE map-side
-    // pass over the resident edge list plus one narrow partial-agg
-    // shuffle and ZERO edge-row movement. Past that the rounds fall
-    // back to shuffle joins on src/dst, with out-weights attached once
-    // in a materialized (src, dst, w, outw) copy.
-    val small = n <= 1000000L
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val ew: DataFrame =
-      if (small) e.join(broadcast(outw.transform(graft.operators.Lineage.pin)), "src")
-      else e.join(outw, "src").transform(graft.operators.Lineage.pin)
+    // the n-row frames (pinned out-weights, pinned ranks) carry exact
+    // stats, so under the broadcast threshold each round is ONE
+    // map-side pass over the resident edge list plus one narrow
+    // partial-agg shuffle and ZERO edge-row movement
+    val ew = e.join(graft.operators.Lineage.pin(
+      e.groupBy("src").agg(sum("w").as("outw"))), "src")
     val base = (scale * (dampDen - dampNum)) / (dampDen * nTeleport)
-    def baseCol = when(nodes("seed") === 1, lit(base)).otherwise(lit(0L))
     var r = nodes.select(col("node"),
       when(col("seed") === 1, lit(scale / nTeleport)).otherwise(lit(0L))
         .as("rank"))
     for (_ <- 1 to iters) {
-      val contrib = ew.join(hinted(r), col("src") === r("node"))
-        .select(col("dst"), expr(contribExpr).as("c"))
-      val in = contrib.groupBy("dst").agg(sum("c").as("inm"))
-      r = nodes.join(hinted(in), nodes("node") === in("dst"), "left")
-        .select(nodes("node"),
-          (baseCol +
+      // each node's inflow and its seed flag meet in ONE aggregation:
+      // the node rows ride a union branch (null c), so nodes without
+      // in-edges keep their row and no join back onto nodes is needed
+      r = ew.join(r, col("src") === r("node"))
+        .select(col("dst").as("node"), expr(contribExpr).as("c"))
+        .unionByName(nodes, allowMissingColumns = true)
+        .groupBy("node").agg(sum("c").as("inm"), max("seed").as("seed"))
+        .select(col("node"),
+          (when(col("seed") === 1, lit(base)).otherwise(lit(0L)) +
             expr(s"${dampNum}L * coalesce(inm, 0L) div ${dampDen}L"))
             .as("rank"))
         .transform(graft.operators.Lineage.pin)

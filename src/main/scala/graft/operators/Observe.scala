@@ -723,17 +723,11 @@ object Observe {
     val vals = df.select(col(grpCol).as("grp"),
       col(valCol).cast("long").as("v"))
     val g = Lineage.pin(vals.groupBy("grp", "v").agg(count(lit(1)).as("c")))
-    // median table is group-sized; broadcast under the engine's
-    // n ≤ 10⁶ discipline (pinned frames carry no stats and would
-    // plan SMJ). The cardinality rides the pin action (pinAgg).
-    val (med, mv) = Lineage.pinAgg(lowerMedianCounts(g, "median"),
-      ("__n", count(lit(1))))
-    val medHinted =
-      if (mv("__n").asInstanceOf[Long] <= 1000000L) broadcast(med) else med
-    val devCounts = g.join(medHinted.select("grp", "median"), "grp")
+    val med = Lineage.pin(lowerMedianCounts(g, "median"))
+    val devCounts = g.join(med.select("grp", "median"), "grp")
       .groupBy(col("grp"), abs(col("v") - col("median")).as("v"))
       .agg(sum("c").as("c"))
     val mad = lowerMedianCounts(devCounts, "mad").select("grp", "mad")
-    mad.join(medHinted, "grp").select("grp", "n", "median", "mad")
+    mad.join(med, "grp").select("grp", "n", "median", "mad")
   }
 }

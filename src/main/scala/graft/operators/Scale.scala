@@ -39,16 +39,7 @@ object Scale {
     * i.e. iff the scan could not supply that many splits anyway.
     * Use immediately upstream of CPU-dense per-row kernels. The
     * round-robin exchange moves est bytes once; by assumption the
-    * kernel it unblocks costs far more.
-    *
-    * Caveat (r17, from the r16 audit): the estimate comes from
-    * `optimizedPlan.stats.sizeInBytes`, which is garbage-large below a
-    * stats-erased pinned leaf (checkpointed frames carry no stats) —
-    * fan would then silently no-op. Every current call site sits
-    * below a scan or a fresh projection, where the estimate is real;
-    * do NOT reuse fan above a Lineage.pin without re-deriving size
-    * knowledge (count + an explicit repartition, or a pinAgg-carried
-    * cardinality). */
+    * kernel it unblocks costs far more. */
   def fan[T](df: Dataset[T]): Dataset[T] = {
     val sess = df.sparkSession
     val cores = sess.sparkContext.defaultParallelism

@@ -110,11 +110,9 @@ object Train {
     val ex = examples.select(col(centerCol).as("center"),
         col(otherCol).as("x"), col(yCol).cast("double").as("y"))
       .distinct().transform(graft.operators.Lineage.pin)
-    // node count rides the node-table pin (Lineage.pinAgg, r17)
-    val (nodes, nodesV) = graft.operators.Lineage.pinAgg(
-      ex.select(col("center").as("node"))
-        .unionByName(ex.select(col("x").as("node"))).distinct(),
-      ("__n", count(lit(1))))
+    val nodes = ex.select(col("center").as("node"))
+      .unionByName(ex.select(col("x").as("node"))).distinct()
+      .transform(graft.operators.Lineage.pin)
     // r16 shape rewrite, value-identical by integer re-association:
     // the model rides as ONE (node, vs: array[dims]) row instead of
     // dims (node, d, v) rows, so each round joins E example rows (not
@@ -128,12 +126,6 @@ object Train {
     // per-node contribution sum must stay < 2^53 for the exact-double
     // vector aggregate — bow-scale corpora sit orders of magnitude
     // inside it.
-    // Pinned frames carry no stats, which forced every round's model
-    // join onto sort-merge; the model is node-count-sized, so size it
-    // once and broadcast under the LinkRank threshold (n ≤ 10^6).
-    val n = nodesV("__n").asInstanceOf[Long]
-    val small = n <= 1000000L
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var emb = nodes.select(col("node"),
         transform(sequence(lit(0L), lit(dims - 1L)),
           d => pmod(rolling_hash(concat_ws("|", col("node"), d)),
@@ -145,8 +137,8 @@ object Train {
       // dot in 2^20-unit integers (each side 2^10); the natural-unit
       // double chain below is replayed VERBATIM by the oracle
       val g = ex
-        .join(hinted(ec), col("center") === col("cn"))
-        .join(hinted(exv), col("x") === col("xn"))
+        .join(ec, col("center") === col("cn"))
+        .join(exv, col("x") === col("xn"))
         .withColumn("m_int", aggregate(
           zip_with(col("cvs"), col("xvs"), (a, b) => a * b),
           lit(0L), (acc, e) => acc + e))
@@ -162,8 +154,10 @@ object Train {
       // one gradient aggregation for BOTH sides: the update only ever
       // uses gs_c + gs_x, and integer sums re-associate freely, so
       // summing the unioned per-side contributions is value-identical
-      // to the two separate aggregates the oracle replays
-      val gs = g.select(explode(array(
+      // to the two separate aggregates the oracle replays. The model
+      // rows ride the same aggregation as a union branch (one non-null
+      // vs per node), so the update needs no join back onto the model.
+      emb = g.select(explode(array(
           struct(col("center").as("node"),
             transform(col("xvs"), e => (col("g") * e).cast("double"))
               .as("contrib")),
@@ -171,10 +165,9 @@ object Train {
             transform(col("cvs"), e => (col("g") * e).cast("double"))
               .as("contrib")))).as("s"))
         .select(col("s.node").as("node"), col("s.contrib").as("contrib"))
+        .unionByName(emb, allowMissingColumns = true)
         .groupBy("node")
-        .agg(vector_sum(col("contrib")).as("gs"))
-      emb = emb
-        .join(hinted(gs), Seq("node"), "left")
+        .agg(max(col("vs")).as("vs"), vector_sum(col("contrib")).as("gs"))
         .select(col("node"),
           zip_with(col("vs"),
             coalesce(col("gs"), array_repeat(lit(0.0), dims)),

@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, Encoder, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge. Spark 4 made the classic constructors
@@ -34,5 +37,18 @@ object Bridge {
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     val deser = exprEnc.createDeserializer()
     (r: Row) => deser(toInternal(r).asInstanceOf[InternalRow])
+  }
+
+  /** A checkpointed frame (a `LogicalRDD` leaf) with exact statistics:
+    * `rows` rows at the optimizer's row-width model. Output attributes,
+    * partitioning, ordering and constraints are kept; the leaf stays a
+    * `LogicalRDD`. */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = {
+    val l = df.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val s = df.sparkSession.asInstanceOf[SparkSession]
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(l.output) * rows,
+      rowCount = Some(BigInt(rows)))
+    Dataset.ofRows(s, l.copy()(s, Some(stats), Some(l.constraints)))
   }
 }
