@@ -6,10 +6,13 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.concurrent.Await
 import scala.concurrent.duration.{Duration, FiniteDuration}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GetStructField}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, SubqueryAlias, View}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.functions.{aggregate, coalesce, count, greatest, lit, map_keys, map_values, octet_length, size, sum}
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType, StructType}
 
 /** Lineage guard for multi-reference operators.
   *
@@ -37,11 +40,14 @@ import org.apache.spark.sql.graft.Bridge
   *
   * Stats contract: every pin (plain, [[pinAgg]], [[pinDerived]], either
   * checkpoint path) returns a leaf carrying the EXACT row count of the
-  * materialization, counted during the pin's own action, and
-  * `sizeInBytes = rows × EstimationUtils.getSizePerRow(output)` — the
-  * row-width model the optimizer applies above every other leaf. So
+  * materialization and its MEASURED size, both counted during the pin's
+  * own action: `sizeInBytes = rows × getSizePerRow(fixed-width columns)
+  * + the summed bytes of every variable-width value` (string and binary
+  * octets; array, map and struct contents at their element widths). So
   * Spark's own `autoBroadcastJoinThreshold` (and AQE above it) sizes
-  * joins against pinned frames; no operator hand-sizes a broadcast.
+  * joins against pinned frames — a frame of long texts is as large as
+  * its texts, not 20 B a string — and no operator hand-sizes a
+  * broadcast.
   */
 object Lineage {
 
@@ -113,14 +119,46 @@ object Lineage {
   def pinAggFallbacks: Long = fallbacks.get()
 
   private val Rows = "__pin_rows"
+  private val Bytes = "__pin_bytes"
+
+  private def fixedWidth(dt: DataType): Boolean = dt match {
+    case _: StringType | BinaryType | _: ArrayType | _: MapType => false
+    case StructType(fs) => fs.forall(f => fixedWidth(f.dataType))
+    case _ => true
+  }
+
+  /** Data bytes of one value of `dt` (a null counts 0). */
+  private def bytesOf(c: Column, dt: DataType): Column = dt match {
+    case _: StringType | BinaryType => coalesce(octet_length(c).cast("long"), lit(0L))
+    case ArrayType(et, _) if fixedWidth(et) =>
+      greatest(size(c), lit(0)).cast("long") * et.defaultSize
+    case ArrayType(et, _) =>
+      coalesce(aggregate(c, lit(0L), (acc, x) => acc + bytesOf(x, et)), lit(0L))
+    case MapType(kt, vt, _) =>
+      bytesOf(map_keys(c), ArrayType(kt)) + bytesOf(map_values(c), ArrayType(vt))
+    case StructType(fs) => fs.indices
+      .map(i => bytesOf(Bridge.column(GetStructField(Bridge.expression(c), i)), fs(i).dataType))
+      .reduceOption(_ + _).getOrElse(lit(0L))
+    case other => lit(other.defaultSize.toLong)
+  }
+
+  /** Summed bytes of the variable-width columns of `out`, if any. */
+  private def variableBytes(out: Seq[Attribute]): Option[Column] =
+    out.filterNot(a => fixedWidth(a.dataType))
+      .map(a => bytesOf(Bridge.column(a), a.dataType))
+      .reduceOption(_ + _).map(sum)
 
   /** [[pinAgg]] with the delivery wait as a parameter. A zero wait
     * never looks at the observation and always takes the fallback. */
   private[graft] def pinAggWithin(wait: FiniteDuration, df: DataFrame,
       aggs: (String, org.apache.spark.sql.Column)*): (DataFrame, Map[String, Any]) = {
-    val all = aggs :+ (Rows -> count(lit(1)))
-    val names = all.map(_._1)
-    val aliased = all.map { case (n, c) => c.as(n) }
+    val out = df.queryExecution.analyzed.output
+    // the size aggregate references the plan's attributes; the fallback
+    // rebuilds it over the pinned leaf's
+    def all(plan: Seq[Attribute]) =
+      aggs ++ Seq(Rows -> count(lit(1))) ++ variableBytes(plan).map(Bytes -> _)
+    val names = all(out).map(_._1)
+    val aliased = all(out).map { case (n, c) => c.as(n) }
     val obs = org.apache.spark.sql.Observation()
     val pinned = checkpoint(df.observe(obs, aliased.head, aliased.tail: _*))
     val delivered = wait > Duration.Zero &&
@@ -135,10 +173,15 @@ object Lineage {
             s"pinAgg: observed metrics not delivered within $wait; " +
               "aggregating the pinned frame instead (logged once, " +
               "counted in Lineage.pinAggFallbacks)")
-        val r = pinned.agg(aliased.head, aliased.tail: _*).head()
+        val again = all(pinned.queryExecution.analyzed.output)
+          .map { case (n, c) => c.as(n) }
+        val r = pinned.agg(again.head, again.tail: _*).head()
         names.zipWithIndex.map { case (n, i) => (n, r.get(i)) }.toMap
       }
-    (Bridge.withRowCount(pinned, vals(Rows).asInstanceOf[Long]), vals - Rows)
+    val rows = vals(Rows).asInstanceOf[Long]
+    val bytes = EstimationUtils.getSizePerRow(out.filter(a => fixedWidth(a.dataType))) * rows +
+      Option(vals.getOrElse(Bytes, null)).fold(BigInt(0))(v => BigInt(v.asInstanceOf[Long]))
+    (Bridge.withStats(pinned, rows, bytes), vals - Rows - Bytes)
   }
 
   private def scanShaped(p: LogicalPlan): Boolean = p match {

@@ -258,12 +258,13 @@ object LinkRank {
     val n = nv("__n").asInstanceOf[Long]
     val nTeleport = if (seeds.isEmpty) n else nv("__ns").asInstanceOf[Long]
     require(nTeleport > 0, "no seed node present in the graph")
-    // the n-row frames (pinned out-weights, pinned ranks) carry exact
-    // stats, so under the broadcast threshold each round is ONE
-    // map-side pass over the resident edge list plus one narrow
-    // partial-agg shuffle and ZERO edge-row movement
-    val ew = e.join(graft.operators.Lineage.pin(
-      e.groupBy("src").agg(sum("w").as("outw"))), "src")
+    // out-weights attach ONCE, in a pinned (src, dst, w, outw) copy
+    // of the edge list; the pinned ranks carry exact stats, so while
+    // they fit the broadcast threshold each round is one map-side pass
+    // over that copy plus one narrow partial-agg shuffle, and past it
+    // Spark plans the round's join as a shuffle join on src
+    val ew = graft.operators.Lineage.pin(
+      e.join(e.groupBy("src").agg(sum("w").as("outw")), "src"))
     val base = (scale * (dampDen - dampNum)) / (dampDen * nTeleport)
     var r = nodes.select(col("node"),
       when(col("seed") === 1, lit(scale / nTeleport)).otherwise(lit(0L))

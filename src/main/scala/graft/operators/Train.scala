@@ -99,10 +99,12 @@ object Train {
     * Init is hash-seeded (rolling_hash(node|d) mod 513 − 256): no RNG
     * state, reproducible at any partitioning.
     *
-    * Scale shape per round: examples×dims join products against the
-    * embedding table (E·D rows), two grad aggregates keyed (node,
-    * dim), one model-sized update join. Rounds localCheckpoint so the
-    * plan stays bounded (the k-means/label-spread discipline). */
+    * Scale shape per round: two joins of the E example rows against
+    * the embedding table (one (node, vs: array[dims]) row per node),
+    * then ONE groupBy(node) that sums both sides' gradient vectors and
+    * folds in the model rows as a union branch, so the update needs no
+    * join back onto the model. Rounds localCheckpoint so the plan
+    * stays bounded (the k-means/label-spread discipline). */
   def skipgramSgd(examples: DataFrame, centerCol: String, otherCol: String,
                   yCol: String, dims: Int, rounds: Int,
                   dampDen: Long = 65536L): DataFrame = {

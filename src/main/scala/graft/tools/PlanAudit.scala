@@ -50,8 +50,8 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
       val df = SparkEntry.queries(n)(spark, sfDir)
       df.explain("formatted")
       df.write.format("noop").mode("overwrite").save()
-      // the listener buses are asynchronous: let the last events land
-      Thread.sleep(2000)
+      // the listener buses are asynchronous: deliver every posted event
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
       val ex = execs.asScala.toSeq
       ex.foreach { case (f, b, m, x) => println(s"exec $f: bhj=$b smj=$m shuffles=$x") }
       println(s"audit: jobs=${jobs.get} executions=${ex.size} " +

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -40,15 +39,18 @@ object Bridge {
   }
 
   /** A checkpointed frame (a `LogicalRDD` leaf) with exact statistics:
-    * `rows` rows at the optimizer's row-width model. Output attributes,
+    * `rows` rows of `sizeInBytes` in total. Output attributes,
     * partitioning, ordering and constraints are kept; the leaf stays a
     * `LogicalRDD`. */
-  def withRowCount(df: DataFrame, rows: Long): DataFrame = {
+  def withStats(df: DataFrame, rows: Long, sizeInBytes: BigInt): DataFrame = {
     val l = df.queryExecution.logical.asInstanceOf[LogicalRDD]
     val s = df.sparkSession.asInstanceOf[SparkSession]
-    val stats = Statistics(
-      sizeInBytes = EstimationUtils.getSizePerRow(l.output) * rows,
-      rowCount = Some(BigInt(rows)))
+    val stats = Statistics(sizeInBytes = sizeInBytes, rowCount = Some(BigInt(rows)))
     Dataset.ofRows(s, l.copy()(s, Some(stats), Some(l.constraints)))
   }
+
+  /** Block until every event posted to `spark`'s listener bus so far
+    * has reached its listeners. */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -76,6 +76,36 @@ class PinStatsSpec extends SparkSpec {
     assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty, plan)
   }
 
+  // 20k rows of 1000-char texts (~20 MB, twice the broadcast
+  // threshold; the default 20 B string width would call it ~1 MB) with
+  // one value of every variable-width shape beside them
+  private def longTexts: DataFrame =
+    spark.range(0, 20000, 1, 4).select(col("id").as("k"),
+      repeat(lit("x"), 1000).as("text"),
+      array(col("id"), col("id") + 1).as("fps"),
+      array(lit("ab"), lit("cde")).as("toks"),
+      struct(lit("abcd").as("s"), col("id").as("i")).as("st"),
+      map(lit("k"), lit("vv")).as("m"))
+
+  // per row: 8 row overhead + 8 for k, then the measured values:
+  // text 1000, fps 2×8, toks 2+3, st 4+8, m 1+2
+  private val longTextBytes = BigInt(20000) * (16 + 1000 + 16 + 5 + 12 + 3)
+
+  test("a pin's size is its measured bytes, on the fallback path too") {
+    val p = Lineage.pin(longTexts)
+    assert(p.queryExecution.optimizedPlan.stats.sizeInBytes == longTextBytes)
+    val (q, _) = Lineage.pinAggWithin(Duration.Zero, longTexts)
+    assert(q.queryExecution.optimizedPlan.stats.sizeInBytes == longTextBytes)
+    assert(q.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(20000)))
+  }
+
+  test("a pinned frame of long texts above the threshold is not broadcast") {
+    val p = Lineage.pin(longTexts)
+    val big = spark.range(0, 2000000, 1, 4).select(col("id").as("k"))
+    val plan = big.join(p, "k").queryExecution.sparkPlan
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty, plan)
+  }
+
   // Spark jobs `body` starts on this thread. A pin whose observed
   // metrics missed delivery would add its fallback aggregate job here.
   private def jobsOf(body: => DataFrame): Int = {
