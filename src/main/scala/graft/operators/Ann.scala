@@ -1148,7 +1148,10 @@ object Ann {
     * table and appended into their `cluster=` directories. Cost is one
     * map-only pass over the batch — the index is never rewritten, and
     * searches see the union corpus immediately. The vector ingest twin
-    * of [[graft.operators.Dedup.appendSignatures]]. */
+    * of [[graft.operators.Dedup.appendSignatures]], with one layout
+    * difference: the signature append writes one file per target size,
+    * while this one writes a file per (write task, cluster touched),
+    * which a cluster's probe then opens. */
   def appendToIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
                        path: String): Unit = {
     val spark = batch.sparkSession

@@ -570,47 +570,56 @@ object Curate {
                   stopWords: Seq[String] =
                     Seq("the", "be", "to", "of", "and", "that", "have", "with"))
       : DataFrame = {
+    val checks = gopherChecks(col("__gs"), minWords, maxWords)
+    withGopherStats(docs, textCol, stopWords)
+      .select(col(idCol).as("doc_id") +: element_at(col("__gs"), 1).as("n_words") +:
+        checks.map { case (n, ok) => ok.cast("long").as(n) }: _*)
+      .withColumn("keep",
+        (checks.map(c => col(c._1)).reduce(_ * _) === 1).cast("long"))
+  }
+
+  /** `docs` plus a boolean `keepCol`: the [[gopherFlags]] `keep`
+    * verdict without the per-rule flags, for pipelines that only
+    * filter on it (the streaming ingest pin computes it beside the
+    * MinHash signatures in one pass over the batch). */
+  private[graft] def withGopherKeep(docs: DataFrame, textCol: String, keepCol: String,
+                                    stopWords: Seq[String], minWords: Int = 50,
+                                    maxWords: Int = 100000): DataFrame =
+    withGopherStats(docs, textCol, stopWords)
+      .withColumn(keepCol,
+        gopherChecks(col("__gs"), minWords, maxWords).map(_._2).reduce(_ && _))
+      .drop("__gs")
+
+  private def withGopherStats(docs: DataFrame, textCol: String,
+                              stopWords: Seq[String]): DataFrame = {
     require(stopWords.nonEmpty, "gopherFlags needs a non-empty stop list")
-    val stopArr = array(stopWords.map(lit): _*)
     // ONE fused codegen'd pass computes all eight statistics: the
     // equivalent higher-order builtins (filter/transform/aggregate
     // lambdas) are CodegenFallback in Spark — eight interpreted walks
     // over every token array, which is real CPU at corpus scale.
     // Kernel parity with the builtin composition is spec-gated.
-    docs
-      .withColumn("__gs",
-        graft.functions.gopher_stats(coalesce(col(textCol), lit("")), stopArr))
-      .withColumn("n_words", element_at(col("__gs"), 1))
-      .withColumn("__sumlen", element_at(col("__gs"), 2))
-      .withColumn("__alpha", element_at(col("__gs"), 3))
-      .withColumn("__sym", element_at(col("__gs"), 4))
-      .withColumn("__stop", element_at(col("__gs"), 5))
-      .withColumn("__nl", element_at(col("__gs"), 6))
-      .withColumn("__bullet", element_at(col("__gs"), 7))
-      .withColumn("__ell", element_at(col("__gs"), 8))
-      .select(
-        col(idCol).as("doc_id"),
-        col("n_words"),
-        (col("n_words") >= minWords && col("n_words") <= maxWords)
-          .cast("long").as("ok_words"),
-        // 3 <= mean word length <= 10, cross-multiplied
-        (col("__sumlen") >= col("n_words") * 3 &&
-          col("__sumlen") <= col("n_words") * 10)
-          .cast("long").as("ok_wordlen"),
-        // symbol-to-word ratio < 0.1
-        (col("__sym") * 10 < col("n_words")).cast("long").as("ok_symbols"),
-        // < 90% bullet lines, < 30% ellipsis lines
-        (col("__bullet") * 10 < col("__nl") * 9 &&
-          col("__ell") * 10 < col("__nl") * 3)
-          .cast("long").as("ok_lines"),
-        // >= 80% of words contain an alphabetic character
-        (col("__alpha") * 5 >= col("n_words") * 4).cast("long").as("ok_alpha"),
-        // at least two distinct stop words present
-        (col("__stop") >= 2).cast("long").as("ok_stopwords"))
-      .withColumn("keep",
-        (col("ok_words") * col("ok_wordlen") * col("ok_symbols") *
-          col("ok_lines") * col("ok_alpha") * col("ok_stopwords") === 1)
-          .cast("long"))
+    docs.withColumn("__gs", graft.functions.gopher_stats(
+      coalesce(col(textCol), lit("")), array(stopWords.map(lit): _*)))
+  }
+
+  /** The Gopher rules over one `gopher_stats` array `gs` (n_words,
+    * Σ word length, alphabetic words, symbols, stop words, lines,
+    * bullet lines, ellipsis lines), as (flag name, passes) pairs. */
+  private def gopherChecks(gs: Column, minWords: Int, maxWords: Int): Seq[(String, Column)] = {
+    def stat(i: Int) = element_at(gs, i)
+    val nWords = stat(1)
+    Seq(
+      "ok_words" -> (nWords >= minWords && nWords <= maxWords),
+      // 3 <= mean word length <= 10, cross-multiplied
+      "ok_wordlen" -> (stat(2) >= nWords * 3 && stat(2) <= nWords * 10),
+      // symbol-to-word ratio < 0.1
+      "ok_symbols" -> (stat(4) * 10 < nWords),
+      // < 90% bullet lines, < 30% ellipsis lines
+      "ok_lines" -> (stat(7) * 10 < stat(6) * 9 && stat(8) * 10 < stat(6) * 3),
+      // >= 80% of words contain an alphabetic character
+      "ok_alpha" -> (stat(3) * 5 >= nWords * 4),
+      // at least two distinct stop words present
+      "ok_stopwords" -> (stat(5) >= 2))
   }
 
   /** L52: token-blocklist filter — the C4 "bad words" pre-filter

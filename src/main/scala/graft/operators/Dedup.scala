@@ -442,10 +442,7 @@ object Dedup {
     * pairs cannot round up past the final jac filter). */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 64, bands: Int = 8, minJaccard: Double = 0.5): DataFrame = {
-    require(k % bands == 0,
-      s"bands ($bands) must divide k ($k): a remainder would silently " +
-        "truncate the signature and change the collision curve")
-    val rt = math.round(math.max(0.0, minJaccard - 0.001) * 10000)
+    requireBanding(k, bands)
     // fan below both kernels (serial on a one-split corpus); pin the
     // banded frame — the a/b candidate roles re-execute its subtree
     val docs = Scale.fan(df).select(col(idCol).as("id"),
@@ -459,6 +456,21 @@ object Dedup {
       .select(col(idCol).as("id"), size(tokenIdSet(textCol)).as("sz"),
         posexplode(minhash_band_hashes(tokenize_ws(col(textCol)), k, bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
+    bandedPairs(banded, docs, minJaccard)
+  }
+
+  private def requireBanding(k: Int, bands: Int): Unit =
+    require(k % bands == 0,
+      s"bands ($bands) must divide k ($k): a remainder would silently " +
+        "truncate the signature and change the collision curve")
+
+  /** Candidate and verify halves of [[minhashPairs]]: `banded` rows
+    * (id, sz, band, bucket) that collide in a band and pass the size
+    * prune become distinct (id1 < id2) candidates, verified by exact
+    * Jaccard over `docs`' (id, ids) token-id sets. */
+  private def bandedPairs(banded: DataFrame, docs: DataFrame,
+                          minJaccard: Double): DataFrame = {
+    val rt = math.round(math.max(0.0, minJaccard - 0.001) * 10000)
     val cand = banded.as("a")
       .join(banded.as("b"), col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id") &&
@@ -1177,9 +1189,7 @@ object Dedup {
     * persisted signature table. */
   private def bandedSignatures(df: DataFrame, idCol: String, textCol: String,
                                k: Int, bands: Int): DataFrame = {
-    require(k % bands == 0,
-      s"bands ($bands) must divide k ($k): a remainder would silently " +
-        "truncate the signature and change the collision curve")
+    requireBanding(k, bands)
     // fan below the signature kernel (serial on a one-split corpus)
     Scale.fan(df).select(col(idCol).as("id"), tokenIdSet(textCol).as("ids"),
         posexplode(minhash_band_hashes(tokenize_ws(col(textCol)), k, bands)))
@@ -1210,38 +1220,100 @@ object Dedup {
       .select("incoming_id", "corpus_id", "jac")
       .distinct()
 
-  private def writeSignatures(docs: DataFrame, idCol: String, textCol: String,
-                              table: String, k: Int, bands: Int,
-                              buckets: Int, mode: String): Unit = {
-    if (mode == "overwrite") Lexical.dropManaged(docs.sparkSession, table)
-    bandedSignatures(docs, idCol, textCol, k, bands)
-      .write.mode(mode)
-      .bucketBy(buckets, "band", "bucket")
-      .format("parquet")
-      .saveAsTable(table)
+  /** Persist the corpus's banded signature table (id, ids, band,
+    * bucket): build once per corpus, then every ingest batch probes it
+    * with zero recompute of corpus signatures. The table is plain
+    * parquet, one file per write task: the probe broadcasts the (small)
+    * batch side, so a layout keyed on (band, bucket) would save no
+    * shuffle, and its one-file-per-bucket appends made every later
+    * probe open more files. The incremental-ingest twin of
+    * `Ann.buildIvfIndex`. Probes and appends must use the SAME k/bands
+    * the table was built with (mismatched banding probes silently
+    * match nothing). */
+  def buildSignatureTable(corpus: DataFrame, idCol: String, textCol: String,
+                          table: String, k: Int = 64, bands: Int = 8): Unit = {
+    Lexical.dropManaged(corpus.sparkSession, table)
+    bandedSignatures(corpus, idCol, textCol, k, bands)
+      .write.mode("overwrite").format("parquet").saveAsTable(table)
   }
 
-  /** Persist the corpus's banded signature table, bucketed by the
-    * (band, bucket) probe key: build once per corpus, then every
-    * ingest batch probes it with zero recompute of corpus signatures
-    * AND no shuffle of the corpus side (the bucketed layout already
-    * matches the join key). The incremental-ingest twin of
-    * `Ann.buildIvfIndex`. Probes and appends must use the SAME
-    * k/bands/buckets the table was built with. */
-  def buildSignatureTable(corpus: DataFrame, idCol: String, textCol: String,
-                          table: String, k: Int = 64, bands: Int = 8,
-                          buckets: Int = 32): Unit =
-    writeSignatures(corpus, idCol, textCol, table, k, bands, buckets,
-      "overwrite")
-
   /** Append a batch's banded signatures to an existing signature table
-    * (same bucket layout AND same k/bands/buckets as the build), so
-    * subsequent probes also see these docs — the "accepted rows extend
-    * the corpus" half of dedup-at-ingest. */
+    * (same k/bands as the build), so subsequent probes also see these
+    * docs — the "accepted rows extend the corpus" half of
+    * dedup-at-ingest. Writes one file per `spark.sql.files.maxPartitionBytes`
+    * of the batch ([[Scale.toFileSize]]). */
   def appendSignatures(docs: DataFrame, idCol: String, textCol: String,
-                       table: String, k: Int = 64, bands: Int = 8,
-                       buckets: Int = 32): Unit =
-    writeSignatures(docs, idCol, textCol, table, k, bands, buckets, "append")
+                       table: String, k: Int = 64, bands: Int = 8): Unit =
+    appendSigned(withSignatures(docs.select(col(idCol), col(textCol)),
+      textCol, k, bands), idCol, table)
+
+  // --- ingest over precomputed signature columns --------------------
+
+  /** Column names of [[withSignatures]]. */
+  private[graft] val SigBands = "__sig_bands"
+  private[graft] val SigIds = "__sig_ids"
+
+  /** `docs` plus its signature columns, computed once: [[SigBands]],
+    * the `bands` band-bucket hashes of the k-permutation MinHash
+    * signature, and [[SigIds]], the token-id set the verify reads. Both
+    * are null where `where` is not true. The ingest path pins this
+    * frame, so its probe ([[ingestNearDups]]) and its append
+    * ([[appendSigned]]) read the columns instead of rerunning the
+    * kernels. */
+  private[graft] def withSignatures(docs: DataFrame, textCol: String, k: Int,
+                                    bands: Int, where: Column = lit(true)): DataFrame = {
+    requireBanding(k, bands)
+    docs
+      .withColumn(SigBands, when(where, minhash_band_hashes(tokenize_ws(col(textCol)), k, bands)))
+      .withColumn(SigIds, when(where, tokenIdSet(textCol)))
+  }
+
+  /** Signature rows (id, ids, band, bucket) of a [[withSignatures]] frame. */
+  private def signatureRows(docs: DataFrame, idCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), col(SigIds).as("ids"), posexplode(col(SigBands)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+
+  /** Near-dup ingest of a [[withSignatures]] frame: its rows without a
+    * verified ≥ `minJaccard` near-duplicate in the signature `table`
+    * and without a smaller-id one among the batch rows the table does
+    * not already cover — [[minhashAgainstTable]], then [[minhashPairs]]
+    * and [[removeNearDups]] over the probe's survivors, all over the
+    * precomputed columns. A corpus hit on the row's own id is its own
+    * earlier append (ids are unique across stream and corpus), so a
+    * replayed batch still finds itself fresh.
+    *
+    * Both probes run in ONE pinned execution, as (src, dst) removal
+    * edges: a corpus hit is (null, incoming id), a within-batch pair is
+    * (smaller id, larger id). A pair's larger id goes unless its smaller
+    * id is itself a corpus hit, which is exactly the pairs among the
+    * probe's survivors. The edge set's exact (small) count plans every
+    * anti-join as a broadcast. */
+  private[graft] def ingestNearDups(batch: DataFrame, idCol: String, table: String,
+                                    minJaccard: Double): DataFrame = {
+    val rows = signatureRows(batch, idCol)
+    val hits = probeJoin(rows, batch.sparkSession.table(table), minJaccard)
+      .filter(col("incoming_id") =!= col("corpus_id"))
+      .select(lit(null).cast("long").as("src"), col("incoming_id").as("dst"))
+    val pairs = bandedPairs(
+        rows.select(col("id"), size(col("ids")).as("sz"), col("band"), col("bucket")),
+        batch.select(col(idCol).as("id"), col(SigIds).as("ids")), minJaccard)
+      .select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
+    // no distinct: duplicate edges change no anti-join
+    val edges = Lineage.pin(hits.union(pairs))
+    val removed = edges
+      .join(edges.filter(col("src").isNull).select(col("dst").as("__hit")),
+        col("src") === col("__hit"), "left_anti")
+      .select(col("dst").as("__drop_id"))
+    batch.join(removed, col(idCol) === col("__drop_id"), "left_anti")
+  }
+
+  /** Append the signature rows of a [[withSignatures]] frame to
+    * `table`, one file per `spark.sql.files.maxPartitionBytes` of the
+    * frame ([[Scale.toFileSize]]): a trigger's append is one file, so
+    * the probe's scan grows by one file per trigger. */
+  private[graft] def appendSigned(docs: DataFrame, idCol: String, table: String): Unit =
+    signatureRows(Scale.toFileSize(docs), idCol)
+      .write.mode("append").format("parquet").saveAsTable(table)
 
   /** Persist the exact Jaccard pair graph as a table (build once /
     * probe many — the graph twin of [[buildSignatureTable]]): graph
@@ -1500,15 +1572,11 @@ object Dedup {
   /** Delete ids from a persisted signature table — the dedup-at-ingest
     * erasure path (an erased document must stop matching future ingest
     * probes, or its content leaks through dedup decisions). Anti-join
-    * + bucketed rewrite under the SAME (band, bucket) layout read from
-    * the catalog, so probes keep their zero-shuffle plan. Refuses to
-    * empty the table (that's a drop, not a delete). */
+    * + rewrite; the rewrite also compacts the one-file-per-append
+    * layout into the scan's read splits. Refuses to empty the table
+    * (that's a drop, not a delete). */
   def removeSignatures(spark: org.apache.spark.sql.SparkSession,
                        table: String, ids: DataFrame, idCol: String): Unit = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
     val del = ids.select(col(idCol).as("id"))
     val survivors = spark.table(table)
       .join(broadcast(del), Seq("id"), "left_anti")
@@ -1518,8 +1586,7 @@ object Dedup {
     // a metadata+directory move, not a data rewrite)
     val tmp = table + "_swap"
     Lexical.dropManaged(spark, tmp) // stale leftover from a dead run
-    survivors.write.mode("overwrite").bucketBy(buckets, "band", "bucket")
-      .format("parquet").saveAsTable(tmp)
+    survivors.write.mode("overwrite").format("parquet").saveAsTable(tmp)
     if (spark.table(tmp).limit(1).count() == 0L) {
       Lexical.dropManaged(spark, tmp)
       throw new IllegalArgumentException(
@@ -1774,14 +1841,31 @@ object Dedup {
                       ref0: DataFrame, refIdCol: String, refTextCol: String,
                       k: Int = 8, w: Int = 16, minShared: Long = 8L,
                       maxDf: Long = 16L): DataFrame = {
+    val docs = Lineage.pinDerived(docs0)
+    winnowedAgainstFps(docs, idCol, textCol,
+      winnowRef(Lineage.pinDerived(ref0), refIdCol, refTextCol, k, w),
+      k, w, minShared, maxDf)
+  }
+
+  /** The reference side of [[winnowedAgainst]]: (ref_id, rfps), the
+    * sorted winnow fingerprints of every reference document. A caller
+    * that probes the same frozen suite many times (a stream, once per
+    * trigger) pins it once and passes it to [[winnowedAgainstFps]]. */
+  private[graft] def winnowRef(ref: DataFrame, refIdCol: String, refTextCol: String,
+                               k: Int, w: Int): DataFrame =
+    ref.select(col(refIdCol).as("ref_id"),
+      winnow_fps(coalesce(col(refTextCol), lit("")), k, w).as("rfps"))
+
+  /** [[winnowedAgainst]] over a precomputed [[winnowRef]] frame `b`
+    * (same k/w). */
+  private[graft] def winnowedAgainstFps(docs0: DataFrame, idCol: String, textCol: String,
+                                        b: DataFrame, k: Int, w: Int, minShared: Long,
+                                        maxDf: Long): DataFrame = {
     require(minShared >= 1 && maxDf >= 1,
       s"minShared/maxDf must be >= 1, got $minShared/$maxDf")
     val docs = Lineage.pinDerived(docs0)
-    val ref = Lineage.pinDerived(ref0)
     val a = docs.select(col(idCol).as("id"),
       winnow_fps(coalesce(col(textCol), lit("")), k, w).as("fps"))
-    val b = ref.select(col(refIdCol).as("ref_id"),
-      winnow_fps(coalesce(col(refTextCol), lit("")), k, w).as("rfps"))
     val pa = a.select(col("id"), explode(col("fps")).as("fp"))
     val pb = b.select(col("ref_id"), explode(col("rfps")).as("fp"))
     val dfa = pa.groupBy("fp").agg(count(lit(1)).as("df"))

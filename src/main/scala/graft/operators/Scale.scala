@@ -48,6 +48,19 @@ object Scale {
     if (est < BigInt(maxPB) * cores) df.repartition(cores) else df
   }
 
+  /** `df` coalesced (no shuffle) to max(1, ⌈est / maxPartitionBytes⌉)
+    * partitions, so a write of it produces files of about the size a
+    * scan reads as one split: a small append (a streaming trigger's
+    * survivors or signatures) is one file, not one per upstream task.
+    * The estimate is measured for a pinned frame (see [[Lineage]]).
+    * Use where the rows are already computed, e.g. on a pin: the
+    * coalesced tasks also run everything upstream of it. */
+  def toFileSize[T](df: Dataset[T]): Dataset[T] = {
+    val maxPB = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    df.coalesce(((est + maxPB - 1) / maxPB).max(1).min(Int.MaxValue).toInt)
+  }
+
   /** A session-conf-isolated clone of `s` whose AQE coalescing floor
     * is lowered so that low-byte/high-CPU post-shuffle stages keep the
     * cores busy (failure mode 2 above). Shares the SparkContext,

@@ -133,10 +133,13 @@ object Sessionize {
     * that half's own sessionization. Returns the union of the two
     * halves' frames with `__side` = the batchSide value; filter and
     * drop it to recover each half (pin first — the two consumers
-    * would otherwise re-run the pass). */
+    * would otherwise re-run the pass). A null batchSide (e.g. a null
+    * `ts` compared with the cutoff) counts as the prior half: null
+    * timestamps sort first, before every batch event, so every event
+    * lands in exactly one half and no row is dropped. */
   def sessionFramesSplit(events: DataFrame, userCol: String, gapNs: Long,
                          batchSide: Column): DataFrame =
-    withSessionIdsKeys(events.withColumn("__side", batchSide),
+    withSessionIdsKeys(events.withColumn("__side", coalesce(batchSide, lit(false))),
         Seq(userCol, "__side"), gapNs)
       .groupBy(col(userCol), col("__side"), col("sess_id"))
       .agg(min("ts").as("start_ts"), max("ts").as("end_ts"),

@@ -502,8 +502,9 @@ object QueueStreaming {
     * count and eval attribution. The guarantee rides through: a
     * streamed doc quoting ≥ w+k−1 verbatim chars of any eval doc
     * CANNOT land unflagged. The eval frame is fixed per gate (frozen
-    * suite — the decontamination contract); per-trigger cost is the
-    * batch-vs-suite probe, state-free and replay-idempotent
+    * suite — the decontamination contract), so its fingerprints are
+    * computed and pinned once, when the stream starts; per-trigger
+    * cost is the batch-vs-suite probe, state-free and replay-idempotent
     * (per-batch output dirs overwrite). */
   def winnowDecontaminationGateStream(docs: DataFrame, eval: DataFrame,
                                       idCol: String, textCol: String,
@@ -511,13 +512,15 @@ object QueueStreaming {
                                       k: Int = 8, w: Int = 16,
                                       minShared: Long = 8L,
                                       maxDf: Long = 16L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.operators.{Dedup, Lineage}
+    // the suite is frozen: fingerprint it once per stream
+    val ref = Lineage.pin(Dedup.winnowRef(eval, idCol, textCol, k, w))
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Dedup
-        val b = batch.toDF().transform(graft.operators.Lineage.pin)
-        val hits = Dedup.winnowedAgainst(b, idCol, textCol,
-            eval, idCol, textCol, k, w, minShared, maxDf)
+        val b = batch.toDF().transform(Lineage.pin)
+        val hits = Dedup.winnowedAgainstFps(b, idCol, textCol, ref, k, w,
+            minShared, maxDf)
           .groupBy(col("id").as(idCol))
           .agg(max(struct(col("n_shared"), col("ref_id"))).as("top"))
           .select(col(idCol), col("top.n_shared").as("n_shared"),
@@ -529,6 +532,7 @@ object QueueStreaming {
       }
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   /** C13w: streaming novelty ingest — L83's first-owner attribution
     * maintained continuously: every micro-batch commits its
@@ -1449,8 +1453,11 @@ object QueueStreaming {
     * the probe needs batch-side distinct + join-back, which the pure
     * stream-static join API can't express — and it mirrors the
     * reference's consume-loop (pop batch, process, commit) exactly.
-    * The corpus side stays bucketed on the probe key, so each trigger
-    * shuffles only the (small) incoming batch.
+    * Each document's signature is computed once per trigger, in the
+    * pin of the batch: the probe, the within-batch pairs and the
+    * append all read it. The probe broadcasts the (small) batch side
+    * against the table's scan, and the append adds one file per
+    * trigger.
     *
     * Exactly-once output: the parquet for batch N goes to
     * `outPath/batch=N` with overwrite, so a replayed batch after a
@@ -1462,35 +1469,20 @@ object QueueStreaming {
     * earlier append and is excluded — without this, a batch replayed
     * after its signature append would flag every one of its rows and
     * overwrite its output directory with nothing.
-    * `k`/`bands`/`buckets` MUST match the values `sigTable` was built
-    * with (mismatched banding probes silently match nothing). */
+    * `k`/`bands` MUST match the values `sigTable` was built with
+    * (mismatched banding probes silently match nothing). */
   def nearDupIngest(incoming: DataFrame, idCol: String, textCol: String,
                     sigTable: String, outPath: String, checkpoint: String,
-                    minJaccard: Double = 0.9, k: Int = 64, bands: Int = 8,
-                    buckets: Int = 32)
+                    minJaccard: Double = 0.9, k: Int = 64, bands: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
     incoming.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.{Dedup, Lineage}
-        val b = batch.toDF()
-        val corpusDups = Dedup
-          .minhashAgainstTable(b, idCol, textCol, sigTable,
-            k = k, bands = bands, minJaccard = minJaccard)
-          .filter(col("incoming_id") =!= col("corpus_id"))
-          .select(col("incoming_id").as("__dup_id")).distinct()
-        // pinned: the within-batch pairs and the removal both read it,
-        // so the corpus probe runs once
-        val fresh = Lineage.pin(
-          b.join(corpusDups, b(idCol) === col("__dup_id"), "left_anti"))
-        val withinPairs = Dedup.minhashPairs(fresh, idCol, textCol,
-          k = k, bands = bands, minJaccard = minJaccard)
-        val kept = Dedup.removeNearDups(fresh, idCol, withinPairs)
-          .persist()
-        try {
-          kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          Dedup.appendSignatures(kept, idCol, textCol, sigTable,
-            k = k, bands = bands, buckets = buckets)
-        } finally { kept.unpersist(); () }
+        import graft.operators.{Dedup, Lineage, Scale}
+        val b = Lineage.pin(Dedup.withSignatures(batch.toDF(), textCol, k, bands))
+        val kept = Lineage.pin(Dedup.ingestNearDups(b, idCol, sigTable, minJaccard))
+        Scale.toFileSize(kept.drop(Dedup.SigBands, Dedup.SigIds))
+          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        Dedup.appendSigned(kept, idCol, sigTable)
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1511,16 +1503,21 @@ object QueueStreaming {
     * funnel frame (stage_idx, stage, n_docs) commits beside the data
     * (`outPath/funnel/batch=N`) — the L111 observability contract,
     * summable across batches because every stage statistic is a
-    * plain count. Each stage frame is computed once per trigger: the
-    * batch, the Gopher survivors, the dedup survivors and the final
-    * survivors are pinned with [[graft.operators.Lineage.pinAgg]],
-    * whose pin action also observes the stage's row count (so the
-    * funnel costs no count job of its own), and the probe's
-    * corpus-fresh rows are pinned before the within-batch pairs and
-    * the removal read them (so the signature table is scanned in one
-    * SQL execution per trigger). Replay-safe: both outputs are
-    * own-partition overwrites; a replayed signature append collapses
-    * in the probe's candidate distinct. Mixture weights and packing stay downstream
+    * plain count. Each document's work runs once per trigger: one pin
+    * of the batch ([[graft.operators.Lineage.pinAgg]]) computes the
+    * Gopher verdict and, for the docs it keeps, the MinHash signature
+    * columns, and observes the ingest and Gopher counts in the same
+    * job; the probe, the within-batch pairs and the signature append
+    * read those columns. The dedup and final survivors are pinned the
+    * same way (their pin action observes the stage's row count, so the
+    * funnel costs no count job of its own). What each stage removes
+    * is pinned as a small id set (the corpus hits and within-batch
+    * pairs in one execution, which is the only scan of the signature
+    * table; then the winnow hits), so every removal is a broadcast
+    * anti-join, and the eval suite's winnow fingerprints are pinned
+    * once per stream. Replay-safe: both outputs are own-partition
+    * overwrites; a replayed signature append collapses in the probe's
+    * candidate distinct. Mixture weights and packing stay downstream
     * consumers ([[mixtureReweightStream]], [[packStream]]) — they are
     * corpus-global decisions, not per-doc gates. */
   def pipelineStream(docs: DataFrame, idCol: String, textCol: String,
@@ -1529,46 +1526,44 @@ object QueueStreaming {
                      stopWords: Seq[String] =
                        Seq("the", "be", "to", "of", "and", "that", "have", "with"),
                      minJaccard: Double = 0.9, k: Int = 64, bands: Int = 8,
-                     buckets: Int = 32, winK: Int = 8, winW: Int = 16,
+                     winK: Int = 8, winW: Int = 16,
                      minShared: Long = 8L, maxDf: Long = 16L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.operators.{Curate, Dedup, Lineage, Scale}
+    // the eval suite is frozen: fingerprint it once per stream
+    val ref = Lineage.pin(Dedup.winnowRef(eval, idCol, textCol, winK, winW))
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.{Curate, Dedup, Lineage}
         val spark = batch.sparkSession
         def pinCount(df: DataFrame): (DataFrame, Long) = {
           val (pinned, vals) = Lineage.pinAgg(df, "n" -> count(lit(1)))
           (pinned, vals("n").asInstanceOf[Long])
         }
-        val (b, nIngest) = pinCount(batch.toDF())
-        // stage 1: Gopher battery
-        val keep = Curate.gopherFlags(b, idCol, textCol,
-            stopWords = stopWords)
-          .filter(col("keep") === 1).select(col("doc_id").as(idCol))
-        val (g, nGopher) = pinCount(b.join(keep, Seq(idCol)))
-        // stage 2: near-dup ingest (corpus state probe + within-batch);
-        // `fresh` is pinned so the probe runs in one execution
-        val corpusDups = Dedup
-          .minhashAgainstTable(g, idCol, textCol, sigTable,
-            k = k, bands = bands, minJaccard = minJaccard)
-          .filter(col("incoming_id") =!= col("corpus_id"))
-          .select(col("incoming_id").as("__dup_id")).distinct()
-        val fresh = Lineage.pin(g.join(corpusDups,
-          g(idCol) === col("__dup_id"), "left_anti"))
-        val (deduped, nDeduped) = pinCount(Dedup.removeNearDups(fresh, idCol,
-          Dedup.minhashPairs(fresh, idCol, textCol,
-            k = k, bands = bands, minJaccard = minJaccard)))
-        // stage 3: winnow decontamination vs the frozen suite
-        val flagged = Dedup.winnowedAgainst(deduped, idCol, textCol,
-            eval, idCol, textCol, winK, winW, minShared, maxDf)
-          .select(col("id").as("__c_id")).distinct()
+        // stage 1: Gopher battery, fused with the signature kernels
+        // (computed for the kept docs only) into the batch's pin
+        val keep = "__gopher_keep"
+        val (b, seen) = Lineage.pinAgg(
+          Dedup.withSignatures(
+            Curate.withGopherKeep(batch.toDF(), textCol, keep, stopWords),
+            textCol, k, bands, col(keep)),
+          "n_ingest" -> count(lit(1)), "n_gopher" -> count(when(col(keep), 1)))
+        val g = b.filter(col(keep)).drop(keep)
+        // stage 2: near-dup ingest (corpus state probe + within-batch)
+        val (deduped, nDeduped) = pinCount(
+          Dedup.ingestNearDups(g, idCol, sigTable, minJaccard))
+        // stage 3: winnow decontamination vs the frozen suite; the
+        // flagged ids (one per matched eval doc: the anti-join needs no
+        // distinct) are pinned so the removal is a broadcast anti-join
+        val flagged = Lineage.pin(Dedup.winnowedAgainstFps(deduped, idCol, textCol,
+            ref, winK, winW, minShared, maxDf).select(col("id").as("__c_id")))
         val (kept, nKept) = pinCount(deduped
           .join(flagged, deduped(idCol) === col("__c_id"), "left_anti"))
-        kept.write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
-        Dedup.appendSignatures(kept, idCol, textCol, sigTable,
-          k = k, bands = bands, buckets = buckets)
+        Scale.toFileSize(kept.drop(Dedup.SigBands, Dedup.SigIds))
+          .write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
+        Dedup.appendSigned(kept, idCol, sigTable)
         import spark.implicits._
-        Seq((0L, "ingest", nIngest), (1L, "gopher", nGopher),
+        Seq((0L, "ingest", seen("n_ingest").asInstanceOf[Long]),
+            (1L, "gopher", seen("n_gopher").asInstanceOf[Long]),
             (2L, "dedup_ingest", nDeduped), (3L, "decontam_winnow", nKept))
           .toDF("stage_idx", "stage", "n_docs")
           .coalesce(1)
@@ -1577,6 +1572,7 @@ object QueueStreaming {
       }
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   /** C13x: streaming containment ingest — the asymmetric twin of
     * [[nearDupIngest]], closing the L82 lifecycle (batch pairs →

@@ -81,4 +81,27 @@ class EraseSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(got == expected, "erased counts ≡ never-ingested counts")
   }
+
+  test("removeSignatures erases ids from a table grown by several appends") {
+    val docs = table("documents").select("doc_id", "text").localCheckpoint(true)
+    val sig = "erase_spec_sig_appended"
+    def part(r: Int) = docs.filter(col("doc_id") % 3 === r)
+    try {
+      Dedup.buildSignatureTable(part(0), "doc_id", "text", sig)
+      Dedup.appendSignatures(part(1), "doc_id", "text", sig)
+      Dedup.appendSignatures(part(2), "doc_id", "text", sig)
+      // one erased id from the build and one from each append
+      val erased = (0 to 2).map(r => part(r).agg(min("doc_id")).head.getLong(0))
+      val probe = docs.filter(col("doc_id").isin(erased: _*))
+        .select(col("doc_id") + 100000L as "doc_id", col("text"))
+      def hits() = Dedup.minhashAgainstTable(probe, "doc_id", "text", sig)
+        .select("corpus_id").distinct().collect().map(_.getLong(0)).toSet
+      assert(erased.toSet.subsetOf(hits()), "every erased id matches before erase")
+      Dedup.removeSignatures(spark, sig, erased.toDF("doc_id"), "doc_id")
+      val after = hits()
+      assert((after & erased.toSet).isEmpty, s"erased ids still match: ${after & erased.toSet}")
+      assert(spark.table(sig).select("id").distinct().count() == docs.count() - erased.size,
+        "every other document keeps its signatures")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $sig")
+  }
 }

@@ -222,4 +222,20 @@ class SessionizeSpec extends SparkSpec {
     assert(gotPrior.nonEmpty && gotPrior == wantPrior)
     assert(gotBatch.nonEmpty && gotBatch == wantBatch)
   }
+
+  test("sessionFramesSplit keeps events whose batch side is null (counted as prior)") {
+    import org.apache.spark.sql.functions._
+    // null ts makes `ts >= cutoff` null; both halves' filters must
+    // still see every event exactly once
+    val ev = Seq((1L, 1L, Option.empty[Long], 1.0), (1L, 2L, Some(100L), 2.0),
+        (1L, 3L, Some(5000L), 3.0), (2L, 4L, None, 4.0))
+      .toDF("user_id", "event_id", "ts", "value")
+    val split = Sessionize.sessionFramesSplit(ev, "user_id", 1000L,
+      col("ts") >= 1000L)
+    def events(half: org.apache.spark.sql.Column) =
+      split.filter(half).agg(coalesce(sum("n_events"), lit(0L))).head.getLong(0)
+    val (prior, batch) = (events(!col("__side")), events(col("__side")))
+    assert(prior + batch == 4L, s"split kept $prior + $batch of 4 events")
+    assert(prior == 3L && batch == 1L, s"null-ts events count as prior: $prior/$batch")
+  }
 }

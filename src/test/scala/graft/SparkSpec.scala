@@ -4,7 +4,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,8 +20,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def table(name: String): org.apache.spark.sql.DataFrame =
     graft.queries.RelationalQueries.t(spark, sfDir, name)
 
-  /** `body`'s result and the job and SQL-execution starts posted while
-    * it ran, from every thread and suite (callers filter them, e.g. by
+  /** `body`'s result and the job and SQL-execution starts (and the
+    * executions' adaptive plan updates) posted while it ran, from every thread and suite (callers filter them, e.g. by
     * job group). A marker job in its own group runs after `body`; a
     * listener receives events in post order, so the marker's arrival
     * means every earlier start has been seen. */
@@ -38,6 +38,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(e)
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart => seen.put(x)
+        case x: SparkListenerSQLAdaptiveExecutionUpdate => seen.put(x)
         case _ =>
       }
     }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -461,6 +461,10 @@ class StreamingSpec extends SparkSpec {
     val corpus = Seq((1L, gopherOk("corp"))).toDF("doc_id", "text")
     try {
       Dedup.buildSignatureTable(corpus, "doc_id", "text", "pipe_sigs")
+      val sigDir = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("pipe_sigs")).location)
+      def sigFiles() = sigDir.listFiles().count(_.getName.endsWith(".parquet"))
+      val files = scala.collection.mutable.ArrayBuffer(sigFiles())
       val eval = Seq((9001L, evalPassage)).toDF("doc_id", "text")
       val mem = MemoryStream[(Long, String)]
       val out = Files.createTempDirectory("pipe_out").toString
@@ -475,6 +479,7 @@ class StreamingSpec extends SparkSpec {
           (12L, aText),                 // within-batch dup of 10
           (13L, gopherOk("corp")))      // dup of the accepted corpus
         q.processAllAvailable()
+        files += sigFiles()
         mem.addData(
           (20L, aText),                 // cross-trigger dup of 10
           // gopher-passing text QUOTING the eval passage verbatim:
@@ -484,6 +489,7 @@ class StreamingSpec extends SparkSpec {
             " " + evalPassage + " the a tailword1 tailword2"),
           (22L, gopherOk("fresh")))     // clean: survives
         q.processAllAvailable()
+        files += sigFiles()
         q.stop()
         q
       }
@@ -529,6 +535,25 @@ class StreamingSpec extends SparkSpec {
         n.nodeName == "HashAggregate" &&
           n.simpleString.contains("keys=[], functions=[count(1)]")))
       assert(counts.size == 0, "standalone count executions")
+      // each document's kernels run in one execution per trigger (the
+      // batch pin), and the probe, pairs and append read its columns
+      def computing(fn: String) = mine.filter(_.physicalPlanDescription.contains(fn))
+        .groupBy(trigger).map { case (t, es) => t -> es.map(_.executionId).toSet }
+      val sigExecs = computing("minhash_band_hashes")
+      assert(sigExecs.keySet == Set(Some(0), Some(1)) && sigExecs.values.forall(_.size == 1),
+        s"executions computing signatures per trigger: $sigExecs")
+      assert(computing("gopher_stats") == sigExecs,
+        "the Gopher stats and the signatures share the batch pin")
+      // every join of the stream is planned as a broadcast or hash
+      // join, initially and after adaptive re-planning
+      val ids = mine.map(_.executionId).toSet
+      val smj = mine.filter(_.physicalPlanDescription.contains("SortMergeJoin")).map(_.executionId) ++
+        starts.collect { case u: SparkListenerSQLAdaptiveExecutionUpdate
+          if ids(u.executionId) && u.physicalPlanDescription.contains("SortMergeJoin") => u.executionId }
+      assert(smj.isEmpty, s"sort-merge joins in executions ${smj.distinct}")
+      // each trigger's survivors extend the signature state by one file
+      assert(files.sliding(2).map(w => w(1) - w(0)).toSeq == Seq(1, 1),
+        s"signature-table data files after build and each trigger: $files")
     } finally spark.sql("DROP TABLE IF EXISTS pipe_sigs")
   }
 
