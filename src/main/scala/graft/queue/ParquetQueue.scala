@@ -163,18 +163,23 @@ class ParquetQueue(
     * schema every read of `data/` returns. */
   private val partitioned: StructType = envelope.add(StructField("batch", LongType))
 
-  /** Next sequence number to be assigned (== total rows ever pushed). */
-  def highwater: Long =
-    if (Files.exists(highwaterFile))
-      new String(Files.readAllBytes(highwaterFile), StandardCharsets.UTF_8).trim.toLong
+  /** A metadata counter file's value, 0 when it does not exist yet. */
+  private def readLong(f: Path): Long =
+    if (Files.exists(f))
+      new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim.toLong
     else 0L
 
-  private def commitHighwater(v: Long): Unit = {
-    val tmp = metaDir.resolve(s"highwater.tmp")
+  /** Commit a metadata counter: write a sibling `.tmp`, then an atomic
+    * rename over the file, so a reader never sees a torn value. */
+  private def writeLong(f: Path, v: Long): Unit = {
+    val tmp = f.resolveSibling(s"${f.getFileName}.tmp")
     Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, highwaterFile, StandardCopyOption.ATOMIC_MOVE,
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** Next sequence number to be assigned (== total rows ever pushed). */
+  def highwater: Long = readLong(highwaterFile)
 
   /** Append a batch (the journal-append primitive, unbounded like the
     * reference's `JournaledFile.push`; the capacity-honoring publisher
@@ -221,7 +226,7 @@ class ParquetQueue(
         spark.createDataFrame(rdd, envelope)
           .write.mode("overwrite").option("compression", codec)
           .parquet(staged.toString)
-        commitHighwater(first + n)
+        writeLong(highwaterFile, first + n)
         val target = Paths.get(dataDir, s"batch=$first")
         // a directory already at the target is a pre-staging-era torn
         // write (its seqs start at the OLD highwater, so it was never
@@ -330,26 +335,13 @@ class ParquetQueue(
 
   /** Compaction floor: seqs below it have been physically reclaimed;
     * new consumers start here instead of 0. */
-  def floor: Long =
-    if (Files.exists(floorFile))
-      new String(Files.readAllBytes(floorFile), StandardCharsets.UTF_8).trim.toLong
-    else 0L
+  def floor: Long = readLong(floorFile)
 
-  def offsetOf(consumer: String): Long = {
-    val f = offsetFile(consumer)
-    val stored =
-      if (Files.exists(f))
-        new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim.toLong
-      else 0L
-    math.max(stored, floor)
-  }
+  def offsetOf(consumer: String): Long =
+    math.max(readLong(offsetFile(consumer)), floor)
 
-  private def commitOffset(consumer: String, v: Long): Unit = {
-    val tmp = metaDir.resolve(s"offset-$consumer.tmp")
-    Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, offsetFile(consumer), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def commitOffset(consumer: String, v: Long): Unit =
+    writeLong(offsetFile(consumer), v)
 
   private def hasData: Boolean = highwater > 0
 
@@ -375,16 +367,28 @@ class ParquetQueue(
     if (firsts.isEmpty) 0L else firsts.max
   }
 
+  /** Committed rows from seq `off` on, pruned to the segments that
+    * can hold them. */
+  private def unconsumed(off: Long): DataFrame =
+    journal.filter(col("batch") >= coveringBatch(off) && col("seq") >= off)
+
   private def notExpired(nowMs: Long) =
     col("lifetime_ms") < 0 || (col("enq_ts") + col("lifetime_ms")) > nowMs
 
+  /** Row-level twin of [[notExpired]] for collected journal rows. */
+  private def live(r: Row, nowMs: Long): Boolean = {
+    val lt = r.getAs[Long]("lifetime_ms")
+    lt < 0 || r.getAs[Long]("enq_ts") + lt > nowMs
+  }
+
+  /** The payload of a collected journal row: the envelope's three
+    * leading columns and the trailing `batch` stripped. */
+  private def payloadOf(r: Row): Row = Row.fromSeq(r.toSeq.drop(3).dropRight(1))
+
   /** Unconsumed, unexpired view for a consumer; batch-partition pruned. */
   def pending(consumer: String = "default",
-              nowMs: Long = System.currentTimeMillis()): DataFrame = {
-    val off = offsetOf(consumer)
-    journal.filter(col("batch") >= coveringBatch(off) &&
-      col("seq") >= off && notExpired(nowMs))
-  }
+              nowMs: Long = System.currentTimeMillis()): DataFrame =
+    unconsumed(offsetOf(consumer)).filter(notExpired(nowMs))
 
   /** Number of unconsumed entries (expired included, as the reference's
     * `size` counts journal+queue bytes-resident items). O(metadata). */
@@ -459,20 +463,14 @@ class ParquetQueue(
     completeStaged() // finish a crashed writer's commit→move window
     val off = offsetOf(consumer)
     if (off >= highwater) return Seq.empty
-    val taken = journal
-      .filter(col("batch") >= coveringBatch(off) && col("seq") >= off)
+    val taken = unconsumed(off)
       .orderBy("seq")
       .limit(n + 1) // +1 to learn whether more remain without a count
       .collect()
       .toSeq
     val popped = taken.take(n)
     if (popped.nonEmpty) commitOffset(consumer, popped.last.getAs[Long]("seq") + 1)
-    popped
-      .filter { r =>
-        val lt = r.getAs[Long]("lifetime_ms")
-        lt < 0 || r.getAs[Long]("enq_ts") + lt > nowMs
-      }
-      .map(r => Row.fromSeq(r.toSeq.drop(3).dropRight(1))) // strip envelope+batch
+    popped.filter(live(_, nowMs)).map(payloadOf)
   }
 
   /** Non-blocking single-entry pop (reference Subscriber.tryPop,
@@ -521,8 +519,7 @@ class ParquetQueue(
     completeStaged()
     val off = offsetOf(consumer)
     if (off >= highwater) return Seq.empty
-    val taken = journal
-      .filter(col("batch") >= coveringBatch(off) && col("seq") >= off)
+    val taken = unconsumed(off)
       .orderBy("seq")
       .limit(n)
       .collect()
@@ -530,10 +527,8 @@ class ParquetQueue(
     val out = Seq.newBuilder[T]
     taken.foreach { r =>
       val seq = r.getAs[Long]("seq")
-      val lt = r.getAs[Long]("lifetime_ms")
-      val live = lt < 0 || r.getAs[Long]("enq_ts") + lt > nowMs
-      if (live) {
-        val payload = Row.fromSeq(r.toSeq.drop(3).dropRight(1))
+      if (live(r, nowMs)) {
+        val payload = payloadOf(r)
         var attempts = 0
         var done = false
         var lastErr: Throwable = null
@@ -589,8 +584,7 @@ class ParquetQueue(
       // torn one would crash the parse (wedging compaction forever) or
       // silently pin the floor — same filter consumerLags uses
       .filter(n => n.startsWith("offset-") && !n.endsWith(".tmp"))
-      .map(n => new String(Files.readAllBytes(metaDir.resolve(n)),
-        StandardCharsets.UTF_8).trim.toLong)
+      .map(n => readLong(metaDir.resolve(n))) // raw: not floored
     if (offs.isEmpty) return 0L
     val minOff = offs.min
     // batch i covers [first_i, first_{i+1}); the last batch never goes
@@ -605,12 +599,7 @@ class ParquetQueue(
           if (Files.isRegularFile(f)) freed += Files.size(f)
           Files.delete(f)
         }
-        if (firsts(i + 1) > floor) {
-          val tmp = metaDir.resolve("floor.tmp")
-          Files.write(tmp, firsts(i + 1).toString.getBytes(StandardCharsets.UTF_8))
-          Files.move(tmp, floorFile, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        }
+        if (firsts(i + 1) > floor) writeLong(floorFile, firsts(i + 1))
       }
     }
     freed
@@ -623,9 +612,8 @@ class ParquetQueue(
     ensureOpen()
     if (!hasData) return None
     val hw = highwater
-    journal.filter(col("batch") === coveringBatch(hw - 1) &&
-        col("seq") === (hw - 1)).collect().headOption
-      .map(r => Row.fromSeq(r.toSeq.drop(3).dropRight(1)))
+    unconsumed(hw - 1).filter(col("seq") === hw - 1).collect().headOption
+      .map(payloadOf)
   }
 
   /** Structured Streaming subscriber over the same segment layout —
@@ -646,10 +634,6 @@ class ParquetQueue(
   def dispose(): Unit = {
     close()
     val p = Paths.get(root)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
+    if (Files.exists(p)) deleteRecursively(p)
   }
 }

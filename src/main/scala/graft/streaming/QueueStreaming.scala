@@ -563,9 +563,9 @@ object QueueStreaming {
           .select(col(idCol).as("id"),
             explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
           .transform(graft.operators.Lineage.pin)
-        sh.groupBy("sh").agg(min(col("id")).as("owner"))
-          .write.mode("overwrite").parquet(s"$ownerPath/batch=$batchId")
-        val owners = spark.read.parquet(ownerPath)
+        VersionedStore.write(sh.groupBy("sh").agg(min(col("id")).as("owner")),
+          ownerPath, batchId)
+        val owners = VersionedStore.deltas(spark, ownerPath, batchId, inclusive = true).get
           .groupBy("sh").agg(min(col("owner")).as("owner"))
         sh.join(owners, "sh")
           .groupBy("id")
@@ -609,14 +609,11 @@ object QueueStreaming {
         // commit this batch's profile FIRST (idempotent per-partition
         // overwrite), then derive the history excluding it — a replay
         // that died between the two writes reconverges on rerun
-        bp.write.mode("overwrite").parquet(s"$profilePath/batch=$batchId")
-        val hist = spark.read.parquet(profilePath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") < batchId)
-          .groupBy("f").agg(sum("cnt").as("cnt"))
-        val histN = hist.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
-        val drift = Curate.profileDrift(bp, if (histN > 0) hist else bp)
+        VersionedStore.write(bp, profilePath, batchId)
+        val hist = VersionedStore.deltas(spark, profilePath, batchId, inclusive = false)
+          .map(_.groupBy("f").agg(sum("cnt").as("cnt")))
+          .filter(_.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0) > 0)
+        val drift = Curate.profileDrift(bp, hist.getOrElse(bp))
           .select(lit(batchId).as("batch_id"),
             col("n_a").as("n_batch"), col("n_b").as("n_history"),
             col("tv_q"))
@@ -648,15 +645,13 @@ object QueueStreaming {
         import org.apache.spark.sql.expressions.Window
         import graft.operators.Dedup
         val spark = batch.sparkSession
-        Dedup.corpusSketch(batch.toDF(), textCol, groupCol, k, shingleN)
-          .write.mode("overwrite").parquet(s"$sketchPath/batch=$batchId")
+        VersionedStore.write(
+          Dedup.corpusSketch(batch.toDF(), textCol, groupCol, k, shingleN),
+          sketchPath, batchId)
         // union of partitions <= this batch: replays reconverge on the
         // same running state instead of seeing later batches
         val w = Window.partitionBy("grp").orderBy("sid")
-        val running = spark.read.parquet(sketchPath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
+        val running = VersionedStore.deltas(spark, sketchPath, batchId, inclusive = true).get
           .select("grp", "sid").distinct()
           .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
           .transform(graft.operators.Lineage.pin) // referenced twice by the estimator
@@ -688,15 +683,11 @@ object QueueStreaming {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.Observe
         val spark = batch.sparkSession
-        Observe.profileByPartition(batch.toDF(),
-            lit(batchId.toString), cols)
-          .write.mode("overwrite").parquet(s"$profilePath/batch=$batchId")
-        val upTo = spark.read.parquet(profilePath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
-          .drop("__b")
-        Observe.mergeProfiles(upTo)
+        VersionedStore.write(
+          Observe.profileByPartition(batch.toDF(), lit(batchId.toString), cols),
+          profilePath, batchId)
+        Observe.mergeProfiles(
+            VersionedStore.deltas(spark, profilePath, batchId, inclusive = true).get)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
@@ -726,15 +717,12 @@ object QueueStreaming {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.Observe
         val spark = batch.sparkSession
-        Observe.quantilesByPartition(batch.toDF(),
-            lit(batchId.toString), cols, k)
-          .write.mode("overwrite").parquet(s"$sketchPath/batch=$batchId")
-        val upTo = spark.read.parquet(sketchPath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
-          .drop("__b")
-        Observe.mergeQuantileProfiles(upTo, probsPpm, k)
+        VersionedStore.write(
+          Observe.quantilesByPartition(batch.toDF(), lit(batchId.toString), cols, k),
+          sketchPath, batchId)
+        Observe.mergeQuantileProfiles(
+            VersionedStore.deltas(spark, sketchPath, batchId, inclusive = true).get,
+            probsPpm, k)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
@@ -759,18 +747,15 @@ object QueueStreaming {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.Sketch
         val spark = batch.sparkSession
-        batch.toDF()
-          .groupBy(col(grpCol).as("grp"))
-          .agg(graft.functions.theta_agg(col(keyCol).cast("string"), lgK)
-            .as("sk"))
-          .write.mode("overwrite").parquet(s"$sketchPath/batch=$batchId")
-        val upTo = spark.read.parquet(sketchPath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
+        VersionedStore.write(batch.toDF()
+            .groupBy(col(grpCol).as("grp"))
+            .agg(graft.functions.theta_agg(col(keyCol).cast("string"), lgK)
+              .as("sk")),
+          sketchPath, batchId)
         // fold each group's per-batch sketches, then expose the
         // matrix through the same pairwise algebra as the batch twin
-        val folded = upTo.groupBy("grp")
+        val folded = VersionedStore.deltas(spark, sketchPath, batchId, inclusive = true).get
+          .groupBy("grp")
           .agg(graft.functions.theta_union_agg(col("sk"), lgK).as("sk"))
         val a = folded.select(col("grp").as("grp_a"), col("sk").as("sk_a"))
         val b = folded.select(col("grp").as("grp_b"), col("sk").as("sk_b"))
@@ -813,14 +798,12 @@ object QueueStreaming {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.Mix
         val spark = batch.sparkSession
-        Mix.prioritySample(batch.toDF(), keyCol, weightCol, k + 1)
-          .select(col("key"), col("w"))
-          .write.mode("overwrite").parquet(s"$samplePath/batch=$batchId")
-        val upTo = spark.read.parquet(samplePath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
-          .select("key", "w").distinct()
+        VersionedStore.write(
+          Mix.prioritySample(batch.toDF(), keyCol, weightCol, k + 1)
+            .select(col("key"), col("w")),
+          samplePath, batchId)
+        val upTo = VersionedStore.deltas(spark, samplePath, batchId, inclusive = true).get
+          .distinct()
         Mix.prioritySample(upTo, "key", "w", k)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -874,19 +857,18 @@ object QueueStreaming {
     * batch into the persisted session frames
     * ([[graft.operators.Sessionize.incremental]]: one-row-per-user
     * boundary join, history never re-shuffles) and commits the merged
-    * frame set under `storePath/batch=N` (overwrite). Replay safety is
-    * the quantile monitor's versioned-store discipline: a replayed
-    * batch re-reads the latest version BELOW its own id and rewrites
-    * its own directory, so at-least-once foreachBatch never
-    * double-merges. Contract: per-user event-time-ordered batches (the
-    * queue-drain shape R20f assumes). Compaction is AUTOMATIC: every
-    * `compactEvery` batches the trigger calls [[compactSessionStore]]
-    * (keep=2 — the just-written version plus the one a replay of this
-    * batch would read below its own id), so an unattended stream's
-    * store stays bounded at ~2 versions with no external operator
-    * action. Safe inside the trigger: compaction is idempotent and a
-    * crash before the checkpoint commit replays against the surviving
-    * prior version. Set compactEvery=0 to manage retention manually. */
+    * frame set as a [[VersionedStore]] snapshot chain under
+    * `storePath/batch=N` (its replay rule: a replayed batch re-reads
+    * the newest version below its own id and rewrites its own, so
+    * at-least-once foreachBatch never double-merges). Contract:
+    * per-user event-time-ordered batches (the queue-drain shape R20f
+    * assumes). Retention is AUTOMATIC: every `compactEvery` batches
+    * the trigger prunes the store to 2 versions, so an unattended
+    * stream's store stays bounded with no external operator action.
+    * Safe inside the trigger: pruning is idempotent and a crash before
+    * the checkpoint commit replays against the surviving prior
+    * version. Set compactEvery=0 to manage retention manually with
+    * [[compactSessionStore]]. */
   def sessionStoreStream(events: DataFrame, userCol: String, gapNs: Long,
                          storePath: String, checkpoint: String,
                          compactEvery: Int = 8)
@@ -894,30 +876,8 @@ object QueueStreaming {
     events.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.Sessionize
-        val spark = batch.sparkSession
-        // only STORE-NOT-YET-CREATED degrades to a fresh first-batch
-        // sessionization — a transient read failure must fail the
-        // micro-batch so the checkpoint retries, never silently commit
-        // a truncated merge as the newest version (and compaction plus
-        // a replay of a batch whose prior version was pruned is a
-        // misconfiguration, not a fresh start: keep >= 2 versions)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            // partition discovery surfaces `batch` as a column; select
-            // the frame columns explicitly so the merge's unionByName
-            // never sees it
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select(col(userCol), col("start_ts"), col("end_ts"),
-                col("n_events"), col("sum_dec")))
-          }
-        val merged = prior match {
+        VersionedStore.advance(batch.sparkSession, storePath, batchId,
+            compactEvery) {
           // validate = true: the long-running unattended path checks
           // the append-only contract on the per-user boundary frame
           // (one bounded action) — an out-of-order batch fails the
@@ -927,66 +887,26 @@ object QueueStreaming {
             gapNs, validate = true)
           case None => Sessionize.sessionFrames(batch.toDF(), userCol, gapNs)
         }
-        merged.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
 
-  /** Compact a [[sessionStoreStream]] store: drop all but the latest
-    * `keep` versions (each version is a full frame-set copy, retained
-    * for replay — once the checkpoint has moved past a batch its
-    * version is dead weight). Never deletes the newest version;
-    * returns the number of versions removed. */
+  /** Compact a snapshot-chain store ([[sessionStoreStream]] and every
+    * other [[VersionedStore.advance]] stream): drop all but the latest
+    * `keep` committed versions (each version is a full state copy,
+    * retained for replay — once the checkpoint has moved past a batch
+    * its version is dead weight). Never deletes the newest committed
+    * version nor a write still in flight; returns the number of
+    * versions removed. */
   def compactSessionStore(spark: org.apache.spark.sql.SparkSession,
-                          storePath: String, keep: Int = 2): Int = {
-    require(keep >= 1, s"must keep at least the latest version, got $keep")
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(storePath))
-      .filter(_.isDirectory)
-      .flatMap(s => "batch=(\\d+)".r.findFirstMatchIn(s.getPath.getName)
-        .map(m => (m.group(1).toLong, s.getPath)))
-      .sortBy(-_._1)
-    val stale = versions.drop(keep)
-    stale.foreach { case (_, p) => fs.delete(p, true) }
-    // Spark caches per-path file listings; an in-place delete must
-    // invalidate them or the next read chases removed files
-    if (stale.nonEmpty) spark.catalog.refreshByPath(storePath)
-    stale.length
-  }
-
-  /** Latest snapshot batch id of a snapshot-chain store, with a
-    * descriptive error when the store is missing or empty — the raw
-    * `max(batch).head().getLong(0)` pattern NPEs on a store the
-    * stream hasn't written yet, which reads as an engine bug instead
-    * of an operations fact. */
-  private def latestStoreBatch(spark: org.apache.spark.sql.SparkSession,
-                               storePath: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-      throw new IllegalStateException(
-        s"snapshot store $storePath does not exist yet — the stream has " +
-          "not committed its first batch (or the path is wrong)")
-    val head = spark.read.parquet(storePath)
-      .agg(max(col("batch").cast("long"))).head()
-    if (head.isNullAt(0))
-      throw new IllegalStateException(
-        s"snapshot store $storePath holds no snapshot rows yet — the " +
-          "stream has not committed its first batch")
-    head.getLong(0)
-  }
+                          storePath: String, keep: Int = 2): Int =
+    VersionedStore.prune(spark, storePath, keep)
 
   /** Latest committed session-frame version under `storePath` —
     * the read side of [[sessionStoreStream]]. */
   def latestSessionFrames(spark: org.apache.spark.sql.SparkSession,
-                          storePath: String): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
-    spark.read.parquet(storePath)
-      .filter(col("batch").cast("long") === top).drop("batch")
-  }
+                          storePath: String): DataFrame =
+    VersionedStore.latest(spark, storePath)
 
   /** C13u: streaming walk continuation — the continuous form of the
     * deterministic walk corpus (L63), maintained by the incremental-
@@ -1005,11 +925,11 @@ object QueueStreaming {
     * linear scan + per-src window, the honest cost of global degree
     * state; at edge volumes where that scan dominates, maintain the
     * adjacency as its own bucketed table and feed extendWalks
-    * directly. Versioned walk tables under `store/walks/batch=N`
-    * follow the session store's replay rules (prior = newest version
-    * BELOW the current batch id; per-batch overwrite), so checkpoint
-    * replays are exact no-ops; [[compactSessionStore]] on the walks
-    * dir bounds retention. */
+    * directly. The walk tables are a [[VersionedStore]] snapshot
+    * chain under `store/walks/batch=N` and the edges its per-batch
+    * deltas under `store/edges/batch=N`, so checkpoint replays are
+    * exact no-ops; [[compactSessionStore]] on the walks dir bounds
+    * retention. */
   def walkStoreStream(edges: DataFrame, srcCol: String, dstCol: String,
                       nWalks: Int, len: Int, storePath: String,
                       checkpoint: String, compactEvery: Int = 8)
@@ -1019,37 +939,19 @@ object QueueStreaming {
         import graft.operators.Walk
         val spark = batch.sparkSession
         val edgeDir = s"$storePath/edges"
-        val walkDir = s"$storePath/walks"
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // commit this batch's edges first (idempotent overwrite), then
         // read the FULL edge set back — on replay the re-written slice
         // is byte-identical, so the adjacency is too
-        batch.toDF().select(col(srcCol), col(dstCol))
-          .write.mode("overwrite").parquet(s"$edgeDir/batch=$batchId")
+        VersionedStore.write(batch.toDF().select(col(srcCol), col(dstCol)),
+          edgeDir, batchId)
         spark.catalog.refreshByPath(edgeDir)
-        val allEdges = spark.read.parquet(edgeDir)
-          .filter(col("batch").cast("long") <= batchId)
-          .select(col(srcCol), col(dstCol))
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(walkDir))) None
-          else {
-            val all = spark.read.parquet(walkDir)
-              .filter(col("batch").cast("long") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("start", "walk", "step", "node"))
-          }
-        val walks = prior match {
+        val allEdges = VersionedStore.deltas(spark, edgeDir, batchId, inclusive = true).get
+        VersionedStore.advance(spark, s"$storePath/walks", batchId, compactEvery) {
           case Some(p) => Walk.extendWalks(allEdges, batch.toDF(), p,
             srcCol, dstCol, nWalks, len)
           case None => Walk.deterministicWalks(allEdges, srcCol, dstCol,
             nWalks, len)
         }
-        walks.write.mode("overwrite").parquet(s"$walkDir/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, walkDir, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1077,11 +979,8 @@ object QueueStreaming {
           .groupBy(expr(s"$tsCol div ${dayNs}L").as("day_idx"))
           .agg(hll_sketch_agg(col(userCol)).as("sk"))
           .transform(graft.operators.Lineage.pin)
-        partial.write.mode("overwrite").parquet(s"$sketchPath/batch=$batchId")
-        val daily = spark.read.parquet(sketchPath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
+        VersionedStore.write(partial, sketchPath, batchId)
+        val daily = VersionedStore.deltas(spark, sketchPath, batchId, inclusive = true).get
           .groupBy("day_idx").agg(hll_union_agg(col("sk")).as("sk"))
         val days = daily.select(col("day_idx").as("w_day")).distinct()
         daily.select(explode(sequence(col("day_idx"),
@@ -1093,7 +992,7 @@ object QueueStreaming {
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         // automatic delta folding: HLL union is idempotent, so the
         // in-trigger fold is crash-safe (see compactRollingActives)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        if (VersionedStore.compactionDue(batchId, compactEvery))
           { compactRollingActives(spark, sketchPath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
@@ -1115,42 +1014,30 @@ object QueueStreaming {
   def compactRollingActives(spark: org.apache.spark.sql.SparkSession,
                             sketchPath: String, keep: Int = 2): Int = {
     require(keep >= 1, s"must keep at least the latest delta, got $keep")
-    val fs = new org.apache.hadoop.fs.Path(sketchPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(sketchPath))
-      .filter(_.isDirectory)
-      .flatMap(s => "batch=(\\d+)".r.findFirstMatchIn(s.getPath.getName)
-        .map(m => (m.group(1).toLong, s.getPath)))
-      .sortBy(-_._1)
-    val stale = versions.drop(keep)
+    val stale = VersionedStore.versions(spark, sketchPath).dropRight(keep)
     if (stale.length <= 1) return 0 // nothing to fold
-    val target = stale.head._1
-    val merged = spark.read
-      .parquet(stale.map(_._2.toString).toIndexedSeq: _*)
+    val target = stale.last._1
+    val merged = VersionedStore.deltas(spark, sketchPath, target, inclusive = true).get
       .groupBy("day_idx").agg(hll_union_agg(col("sk")).as("sk"))
       .transform(graft.operators.Lineage.pin) // materialize BEFORE touching inputs
-    merged.write.mode("overwrite").parquet(s"$sketchPath/batch=$target")
-    stale.tail.foreach { case (_, p) => fs.delete(p, true) }
-    spark.catalog.refreshByPath(sketchPath)
-    stale.length - 1
+    VersionedStore.write(merged, sketchPath, target)
+    // the folded versions below the target are now redundant
+    VersionedStore.prune(spark, sketchPath, keep + 1)
   }
 
   /** C13q: streaming A/B monitor — the continuous form of R41's
     * two-proportion z-test. Per trigger: the batch's per-user
     * conversion-event counts merge into a versioned per-user RUNNING
-    * snapshot under `storePath/batch=N` (the session store's
-    * replay-safe discipline: read the latest version BELOW this batch
-    * id, write your own — at-least-once foreachBatch never
-    * double-counts), then the per-variant counts + z derive from the
+    * snapshot (a [[VersionedStore]] snapshot chain, so at-least-once
+    * foreachBatch never double-counts), then the per-variant counts +
+    * z derive from the
     * NEW snapshot via [[graft.operators.Observe.twoProportionZ]] —
     * the SAME operator the batch query uses, so the streaming readout
     * can never drift from R41's semantics. Per-trigger cost follows
     * the batch plus one user-dimension snapshot merge, never the
     * event history. Conversion = `>= convThreshold` events of
     * `convEvent`; variant = user_id % 2 (deterministic assignment).
-    * Output one row per trigger under `outPath/batch=N`. The
-    * snapshot store compacts with [[compactSessionStore]] (layout-
-    * generic version pruning). */
+    * Output one row per trigger under `outPath/batch=N`. */
   def abMonitorStream(events: DataFrame, userCol: String,
                       eventTypeCol: String, convEvent: String,
                       convThreshold: Long, storePath: String,
@@ -1164,27 +1051,12 @@ object QueueStreaming {
           .groupBy(col(userCol).as("user_id"))
           .agg(sum(when(col(eventTypeCol) === convEvent, 1L).otherwise(0L))
             .as("n_conv_events"))
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // path-missing is the only fresh-start case; any other read
-        // failure fails the trigger (the session store's contract)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select(col("user_id"), col("n_conv_events")))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(p) => p.unionByName(delta).groupBy("user_id")
             .agg(sum("n_conv_events").as("n_conv_events"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        val per = spark.read.parquet(s"$storePath/batch=$batchId")
+        val per = VersionedStore.read(spark, storePath, batchId)
           // pmod, not %: Spark's % keeps the dividend's sign, so a
           // negative user id would land in variant -1 and silently
           // vanish from twoProportionZ's variant-0/1 pivot
@@ -1195,8 +1067,6 @@ object QueueStreaming {
         graft.operators.Observe.twoProportionZ(per)
           .select(lit(batchId).as("batch_id"), col("*"))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1206,14 +1076,12 @@ object QueueStreaming {
     * COUNT, so the batch partial sums exactly into a RUNNING per-source
     * snapshot (rule flags are per-row map-side kernels — a row's flags
     * never depend on other rows, so running totals == the batch
-    * scorecard of everything streamed; parity spec-gated). Versioned
-    * snapshots under `storePath/batch=N` (the session store's
-    * replay-safe read-below-own-id discipline — chosen over per-batch
-    * deltas because SUM, unlike HLL union, is NOT idempotent: a
-    * crash-window double-fold would double-count). Per-trigger cost =
-    * the batch pass + one groups-sized merge, never the doc history.
-    * Old versions compact with [[compactSessionStore]] (it is layout-
-    * generic: snapshots under `batch=N`, newest always kept). */
+    * scorecard of everything streamed; parity spec-gated). A
+    * [[VersionedStore]] snapshot chain under `storePath/batch=N`,
+    * chosen over per-batch deltas because SUM, unlike HLL union, is
+    * NOT idempotent: a crash-window double-fold would double-count.
+    * Per-trigger cost = the batch pass + one groups-sized merge, never
+    * the doc history. */
   def scorecardStream(docs: DataFrame, idCol: String, textCol: String,
                       groupCol: String, stopWords: Seq[String],
                       blocklist: Seq[String], storePath: String,
@@ -1224,20 +1092,7 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val delta = graft.operators.Curate.scorecard(batch.toDF(), idCol,
           textCol, groupCol, stopWords, blocklist)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("grp", "n_docs", "pass_gopher", "pass_repetition",
-                "pass_blocklist", "pass_all"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(p) => p.unionByName(delta).groupBy("grp")
             .agg(sum("n_docs").as("n_docs"),
               sum("pass_gopher").as("pass_gopher"),
@@ -1246,9 +1101,6 @@ object QueueStreaming {
               sum("pass_all").as("pass_all"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1259,8 +1111,8 @@ object QueueStreaming {
     * non-summable metric (distinct texts) rides a mergeable HLL
     * sketch of md5(text) (register-max union — exact in list mode at
     * spec cardinalities, estimate at scale, hence `n_distinct_est`).
-    * One section-tagged versioned snapshot per trigger (the
-    * replay-safe read-below-own-id discipline); read the long-format
+    * One section-tagged [[VersionedStore]] snapshot per trigger;
+    * read the long-format
     * card rows back with [[latestCardRows]]. */
   def cardStream(docs: DataFrame, idCol: String, textCol: String,
                  langCol: String, sourceCol: String,
@@ -1292,19 +1144,7 @@ object QueueStreaming {
             col("pass_gopher"), col("pass_repetition"),
             col("pass_blocklist"), col("pass_all"))
         val delta = statsDelta.unionByName(rulesDelta)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .drop("batch"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(p) => p.unionByName(delta)
             .groupBy("section", "grp_a", "grp_b")
             .agg(sum("n_docs").as("n_docs"),
@@ -1317,9 +1157,6 @@ object QueueStreaming {
               sum("pass_all").as("pass_all"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1329,9 +1166,7 @@ object QueueStreaming {
     * with `n_distinct_est` (HLL) in place of the exact distinct. */
   def latestCardRows(spark: org.apache.spark.sql.SparkSession,
                      storePath: String): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
-    val snap = spark.read.parquet(storePath)
-      .filter(col("batch").cast("long") === top).drop("batch")
+    val snap = VersionedStore.latest(spark, storePath)
     val stats = snap.filter(col("section") === "stats")
       .select(col("grp_a"), col("grp_b"), col("n_docs"),
         col("sum_tokens"), hll_sketch_estimate(col("dsk")).as("n_distinct_est"))
@@ -1429,11 +1264,8 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val bh = Sketch.logHistogramBy(batch.toDF(), keyCol, valueCol)
           .transform(graft.operators.Lineage.pin)
-        bh.write.mode("overwrite").parquet(s"$sketchPath/batch=$batchId")
-        val upTo = spark.read.parquet(sketchPath)
-          .withColumn("__b",
-            regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-          .filter(col("__b") <= batchId)
+        VersionedStore.write(bh, sketchPath, batchId)
+        val upTo = VersionedStore.deltas(spark, sketchPath, batchId, inclusive = true).get
           .groupBy("key", "bucket").agg(sum("n").as("n"))
         Sketch.quantilesBy(upTo, perMille)
           .select(lit(batchId).as("batch_id"), col("key"), col("q"),
@@ -1622,8 +1454,8 @@ object QueueStreaming {
     * ([[graft.operators.Mix.freezeBigramModel]] — a model that moved
     * with the stream would make early stats incomparable with late
     * ones), fold the ADDITIVE per-domain sufficient statistics
-    * (Σq, n) into the snapshot chain (read-below-own-id, replay-safe
-    * like [[scorecardStream]]), and derive the current mixture weights
+    * (Σq, n) into a [[VersionedStore]] snapshot chain, and derive the
+    * current mixture weights
     * any time via [[reweightFromStore]]. Per-trigger state read is one
     * D-row snapshot, never the stream history; the MW rounds run on
     * the D-row loss table ([[graft.operators.Mix.mixtureReweight]]). */
@@ -1637,26 +1469,11 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val delta = graft.operators.Mix.domainLossStats(batch.toDF(),
           textCol, domainCol, modelPath)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("domain", "sq", "nb"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(p) => p.unionByName(delta).groupBy("domain")
             .agg(sum("sq").as("sq"), sum("nb").as("nb"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1665,13 +1482,9 @@ object QueueStreaming {
     * loss → the L100 MW rounds. */
   def reweightFromStore(spark: org.apache.spark.sql.SparkSession,
                         storePath: String, rounds: Int): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
-    val latest = spark.read.parquet(storePath)
-      .filter(col("batch").cast("long") === top)
-      .select("domain", "sq", "nb")
     graft.operators.Mix.mixtureReweight(
-      graft.operators.Mix.domainLossFromStats(latest), "domain", "loss",
-      rounds)
+      graft.operators.Mix.domainLossFromStats(
+        VersionedStore.latest(spark, storePath)), "domain", "loss", rounds)
   }
 
   /** C13ah: streaming content-drift monitor — the L106 content-level
@@ -1695,25 +1508,10 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val delta = graft.operators.Dedup.contentInventory(batch.toDF(),
           textCol, groupCol, k, w)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("grp", "fp"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(p) => p.unionByName(delta).distinct()
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1724,11 +1522,8 @@ object QueueStreaming {
   def contentDriftFromStore(spark: org.apache.spark.sql.SparkSession,
                             storePath: String,
                             baseline: DataFrame): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
     graft.operators.Dedup.inventoryDiff(baseline,
-      spark.read.parquet(storePath)
-        .filter(col("batch").cast("long") === top)
-        .select("grp", "fp"))
+      VersionedStore.latest(spark, storePath))
   }
 
   /** C13af: streaming exact-AUC monitor — classifier quality on live
@@ -1737,8 +1532,8 @@ object QueueStreaming {
     * sufficient statistic is the per-distinct-score (count, positives)
     * table, which is ADDITIVE across batches
     * ([[graft.operators.Curate.scoreCounts]]), so each trigger folds
-    * its delta into the snapshot chain (read-below-own-id, replay-
-    * safe) and [[aucFromStore]] replays the grouped tie-corrected
+    * its delta into a [[VersionedStore]] snapshot chain and
+    * [[aucFromStore]] replays the grouped tie-corrected
     * Mann–Whitney form over the distinct-score-bounded state — never
     * the event history. A dropping live AUC is the earliest signal a
     * gating classifier has drifted off its training distribution. */
@@ -1751,26 +1546,11 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val delta = graft.operators.Curate.scoreCounts(batch.toDF(),
           scoreCol, labelCol)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("mv", "c", "p"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(pr) => pr.unionByName(delta).groupBy("mv")
             .agg(sum("c").as("c"), sum("p").as("p"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1783,8 +1563,8 @@ object QueueStreaming {
     * a fixed gate-at-p≥0.9 pipeline hits first. The per-bin
     * (count, positives, Σp) statistic is ADDITIVE
     * ([[graft.operators.Curate.calibrationStats]]), so each trigger
-    * folds its delta into the snapshot chain (read-below-own-id,
-    * replay-safe) and [[calibrationFromStore]] renders the diagram /
+    * folds its delta into a [[VersionedStore]] snapshot chain and
+    * [[calibrationFromStore]] renders the diagram /
     * ECE off the ≤B-row state — never the event history. */
   def calibrationMonitorStream(scored: DataFrame, scorePpmCol: String,
                                labelCol: String, storePath: String,
@@ -1796,27 +1576,12 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val delta = graft.operators.Curate.calibrationStats(batch.toDF(),
           scorePpmCol, labelCol, buckets)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("bin", "n", "n_pos", "sp"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(pr) => pr.unionByName(delta).groupBy("bin")
             .agg(sum("n").as("n"), sum("n_pos").as("n_pos"),
               sum("sp").cast("decimal(38,0)").as("sp"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1825,11 +1590,8 @@ object QueueStreaming {
     * to [[graft.operators.Curate.calibrationSummary]] for ECE. */
   def calibrationFromStore(spark: org.apache.spark.sql.SparkSession,
                            storePath: String): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
     graft.operators.Curate.calibrationFromStats(
-      spark.read.parquet(storePath)
-        .filter(col("batch").cast("long") === top)
-        .select("bin", "n", "n_pos", "sp"))
+      VersionedStore.latest(spark, storePath))
   }
 
   /** C13am (r16): streaming isotonic calibrator — the L114/L114b
@@ -1843,19 +1605,16 @@ object QueueStreaming {
     * cost of one B-row read + the O(B³) driver closed form. */
   def isotonicFromStore(spark: org.apache.spark.sql.SparkSession,
                         storePath: String): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
     graft.operators.Curate.isotonicFromStats(
-      spark.read.parquet(storePath)
-        .filter(col("batch").cast("long") === top)
-        .select("bin", "n", "n_pos"))
+      VersionedStore.latest(spark, storePath))
   }
 
   /** C13an (r16): streaming conformal calibrator — L115's
     * distribution-free coverage machinery maintained on live labeled
     * traffic: the per-class nonconformity COUNT table (cls, s, c) is
     * exactly additive, so each trigger folds its delta into the
-    * snapshot chain (read-below-own-id, replay-safe) and the current
-    * per-class thresholds derive any time via
+    * [[VersionedStore]] snapshot chain and the current per-class
+    * thresholds derive any time via
     * [[graft.operators.Curate.conformalThresholdsFromCounts]] — the
     * state is value-bounded (≤ 10⁶ ppm rows per class, the C13af
     * score-count discipline), never event-bounded. A serving gate
@@ -1875,26 +1634,11 @@ object QueueStreaming {
             when(col(labelCol), lit(1000000L) - col(scorePpmCol))
               .otherwise(col(scorePpmCol)).cast("long").as("s"))
           .groupBy("cls", "s").agg(count(lit(1)).as("c"))
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("cls", "s", "c"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(pr) => pr.unionByName(delta).groupBy("cls", "s")
             .agg(sum("c").as("c"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1903,12 +1647,8 @@ object QueueStreaming {
   def conformalFromStore(spark: org.apache.spark.sql.SparkSession,
                          storePath: String,
                          alphasPm: Seq[Int] = Seq(100, 200)): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
     graft.operators.Curate.conformalThresholdsFromCounts(
-      spark.read.parquet(storePath)
-        .filter(col("batch").cast("long") === top)
-        .select("cls", "s", "c"),
-      alphasPm)
+      VersionedStore.latest(spark, storePath), alphasPm)
   }
 
   /** C13aj: streaming PII-rate monitor — the L110 scan on live
@@ -1916,8 +1656,8 @@ object QueueStreaming {
     * IPs/phones (an upstream scraper change, a new partner dump) is
     * an ops event long before any batch re-scan would notice. The
     * per-source statistic (n_docs, n_email, n_ip, n_phone) is
-    * ADDITIVE, so each trigger folds its delta into the snapshot
-    * chain (read-below-own-id, replay-safe); [[piiRatesFromStore]]
+    * ADDITIVE, so each trigger folds its delta into a
+    * [[VersionedStore]] snapshot chain; [[piiRatesFromStore]]
     * renders per-mille rates off the source-bounded state, never the
     * doc history. Redaction itself stays a per-row map on the main
     * pipeline — this is the monitoring sidecar. */
@@ -1941,27 +1681,12 @@ object QueueStreaming {
           .agg(count(lit(1)).as("n_docs"),
             sum("__p.n_email").as("n_email"), sum("__p.n_ip").as("n_ip"),
             sum("__p.n_phone").as("n_phone"))
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("source", "n_docs", "n_email", "n_ip", "n_phone"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(pr) => pr.unionByName(delta).groupBy("source")
             .agg(sum("n_docs").as("n_docs"), sum("n_email").as("n_email"),
               sum("n_ip").as("n_ip"), sum("n_phone").as("n_phone"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -1969,12 +1694,11 @@ object QueueStreaming {
   /** C13al: streaming embedding-moment maintenance — the L113
     * whitening model's sufficient statistics (n, Σx, Σxxᵀ — rows
     * (i, j, v), EXACTLY additive in decimal(38,0)) folded into the
-    * snapshot chain per trigger, so the current anisotropy model
+    * [[VersionedStore]] snapshot chain per trigger, so the current
+    * anisotropy model
     * (mean + top principal direction) derives at any time from the
     * d(d+1)/2-row state via [[whitenModelFromStore]] — a bounded
-    * driver-side power iteration, never a row-history replay. Same
-    * read-below-own-id replay discipline and compactEvery retention
-    * as the other additive monitors. */
+    * driver-side power iteration, never a row-history replay. */
   def embedMomentStream(vecs: DataFrame, idCol: String, vecCol: String,
                         storePath: String, checkpoint: String,
                         compactEvery: Int = 8)
@@ -1984,26 +1708,11 @@ object QueueStreaming {
         val spark = batch.sparkSession
         val delta = graft.operators.Whiten.momentStats(batch.toDF(),
           idCol, vecCol)
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) None
-          else {
-            val all = spark.read.parquet(storePath)
-              .filter(col("batch") < batchId)
-            val head = all.agg(max(col("batch").cast("long"))).head()
-            if (head.isNullAt(0)) None
-            else Some(all.filter(col("batch").cast("long") === head.getLong(0))
-              .select("i", "j", "v"))
-          }
-        val snap = prior match {
+        VersionedStore.advance(spark, storePath, batchId, compactEvery) {
           case Some(pr) => pr.unionByName(delta).groupBy("i", "j")
             .agg(sum("v").cast("decimal(38,0)").as("v"))
           case None => delta
         }
-        snap.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          { compactSessionStore(spark, storePath, keep = 2); () }
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -2013,11 +1722,9 @@ object QueueStreaming {
   def whitenModelFromStore(spark: org.apache.spark.sql.SparkSession,
                            storePath: String, rounds: Int = 3)
       : (Long, Array[Long], Array[Long]) = {
-    val top = latestStoreBatch(spark, storePath)
-    val rows = spark.read.parquet(storePath)
-      .filter(col("batch").cast("long") === top)
-      .select("i", "j", "v").collect()
-      .map(r => (r.getInt(0), r.getInt(1), BigDecimal(r.getDecimal(2))))
+    val rows = VersionedStore.latest(spark, storePath).collect()
+      .map(r => (r.getAs[Int]("i"), r.getAs[Int]("j"),
+        BigDecimal(r.getAs[java.math.BigDecimal]("v"))))
       .toSeq
     graft.operators.Whiten.modelFromMoments(rows, rounds)
   }
@@ -2026,9 +1733,7 @@ object QueueStreaming {
     * snapshot. */
   def piiRatesFromStore(spark: org.apache.spark.sql.SparkSession,
                         storePath: String): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
-    spark.read.parquet(storePath)
-      .filter(col("batch").cast("long") === top)
+    VersionedStore.latest(spark, storePath)
       .select(col("source"), col("n_docs"), col("n_email"), col("n_ip"),
         col("n_phone"),
         expr("n_email * 1000 div n_docs").as("email_pm"),
@@ -2039,11 +1744,8 @@ object QueueStreaming {
   /** Exact AUC off the latest score-count snapshot. */
   def aucFromStore(spark: org.apache.spark.sql.SparkSession,
                    storePath: String): DataFrame = {
-    val top = latestStoreBatch(spark, storePath)
     graft.operators.Curate.aucFromScoreCounts(
-      spark.read.parquet(storePath)
-        .filter(col("batch").cast("long") === top)
-        .select("mv", "c", "p"))
+      VersionedStore.latest(spark, storePath))
   }
 
   /** C13ad: streaming winnow ingest — the LOCAL-match member of the

@@ -205,4 +205,26 @@ class LinkRankSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(base === s)
   }
+
+  test("long and decimal rank paths both equal the reference at the weight bound") {
+    // the long path runs while scale * max(w) fits a long: max(w) =
+    // Long.MaxValue / scale takes it, one more unit of weight takes the
+    // decimal(38,0) path; at the bound scale * max(w), the largest
+    // per-edge product, is within `scale` of Long.MaxValue
+    val bound = Long.MaxValue / Scale
+    assert(BigInt(Scale) * bound <= BigInt(Long.MaxValue) &&
+      BigInt(Scale) * (bound + 1) > BigInt(Long.MaxValue))
+    for (wMax <- Seq(bound, bound + 1)) {
+      val edges = Seq(("a", "b", wMax), ("a", "c", 1L), ("b", "d", wMax - 1),
+        ("c", "d", 2L), ("d", "a", wMax), ("e", "a", 3L))
+      val df = edges.toDF("src", "dst", "w")
+      val pr = LinkRank.pageRank(df, "src", "dst", "w", iters = 6)
+        .as[(String, Long)].collect().toMap
+      assert(pr === refRank(edges, 6), s"pageRank at max(w) = $wMax")
+      val h = LinkRank.hits(df, "src", "dst", "w", iters = 3)
+        .as[(String, Long, Long)].collect()
+        .map { case (n, hub, auth) => n -> (hub, auth) }.toMap
+      assert(h === refHits(edges, 3), s"hits at max(w) = $wMax")
+    }
+  }
 }

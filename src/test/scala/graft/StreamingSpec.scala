@@ -704,6 +704,48 @@ class StreamingSpec extends SparkSpec {
     assert(state.count() == 4, "state must be one row per distinct score")
   }
 
+  test("snapshot-chain trigger and store read find their version without a Spark action") {
+    // a version is found by one listing of the store: neither a
+    // steady-state fold nor a latest-snapshot read runs a max(batch)
+    // aggregate over every retained version
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(Long, Boolean)]
+    val store = Files.createTempDirectory("aucjobs_store").toString + "/s"
+    val ckpt = Files.createTempDirectory("aucjobs_ckpt").toString
+    val q = QueueStreaming.aucMonitorStream(
+      mem.toDF().toDF("sc", "lab"), "sc", "lab", store, ckpt)
+    def jobs(starts: Seq[org.apache.spark.scheduler.SparkListenerEvent],
+             group: String, batchId: Option[String]) = starts.count {
+      case j: SparkListenerJobStart =>
+        val p = j.properties
+        p != null && p.getProperty("spark.jobGroup.id") == group &&
+          batchId.forall(_ == p.getProperty("streaming.sql.batchId"))
+      case _ => false
+    }
+    try {
+      mem.addData((10L, true), (20L, false)); q.processAllAvailable()
+      mem.addData((30L, true), (20L, true)); q.processAllAvailable()
+      // batch 2 folds into an existing prior version
+      val (_, fold) = startsDuring {
+        mem.addData((40L, true), (10L, false)); q.processAllAvailable()
+      }
+      val group = s"auc-read-${java.util.UUID.randomUUID}"
+      val (_, read) = startsDuring {
+        spark.sparkContext.setJobGroup(group, "aucFromStore")
+        try QueueStreaming.aucFromStore(spark, store).collect()
+        finally spark.sparkContext.clearJobGroup()
+      }
+      val foldJobs = jobs(fold, q.runId.toString, Some("2"))
+      val readJobs = jobs(read, group, None)
+      // a max(batch) lookup was 2 jobs (its aggregate's shuffle stage
+      // and the result), on top of a schema-inference job per read of
+      // the whole store: 6 and 16 jobs when versions were found that way
+      assert((foldJobs, readJobs) == ((4, 13)),
+        s"jobs (steady-state trigger, aucFromStore): ($foldJobs, $readJobs)")
+    } finally q.stop()
+  }
+
   test("snapshot-chain auto-retention: 6-trigger AUC store stays bounded, parity intact") {
     // r14 verdict item 5: an UNATTENDED snapshot-chain monitor must
     // not retain one full state copy per batch forever. Drive 6
