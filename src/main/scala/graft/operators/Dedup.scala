@@ -1210,15 +1210,23 @@ object Dedup {
 
   private def probeJoin(incoming: DataFrame, corpus: DataFrame,
                         minJaccard: Double): DataFrame =
+    collisions(incoming, corpus, minJaccard).distinct()
+
+  /** (incoming_id, corpus_id, jac, `carry`…) for every band in which
+    * an `incoming` and a `corpus` signature row (id, ids, band, bucket)
+    * collide and whose token sets verify at ≥ `minJaccard`, with the
+    * corpus row's `carry` columns: a pair colliding in several bands
+    * repeats. */
+  private def collisions(incoming: DataFrame, corpus: DataFrame,
+                         minJaccard: Double, carry: String*): DataFrame =
     incoming.as("a")
       .join(corpus.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("incoming_id"), col("b.id").as("corpus_id"),
-        col("a.ids").as("ids1"), col("b.ids").as("ids2"))
+      .select(Seq(col("a.id").as("incoming_id"), col("b.id").as("corpus_id"),
+        col("a.ids").as("ids1"), col("b.ids").as("ids2")) ++ carry.map(c => col(s"b.$c")): _*)
       .withColumn("jac", jacCol)
       .filter(col("jac") >= minJaccard)
-      .select("incoming_id", "corpus_id", "jac")
-      .distinct()
+      .select(("incoming_id" +: "corpus_id" +: "jac" +: carry).map(col): _*)
 
   /** Persist the corpus's banded signature table (id, ids, band,
     * bucket): build once per corpus, then every ingest batch probes it
@@ -1257,7 +1265,7 @@ object Dedup {
     * the `bands` band-bucket hashes of the k-permutation MinHash
     * signature, and [[SigIds]], the token-id set the verify reads. Both
     * are null where `where` is not true. The ingest path pins this
-    * frame, so its probe ([[ingestNearDups]]) and its append
+    * frame, so its probe ([[ingestRemovals]]) and its append
     * ([[appendSigned]]) read the columns instead of rerunning the
     * kernels. */
   private[graft] def withSignatures(docs: DataFrame, textCol: String, k: Int,
@@ -1273,38 +1281,40 @@ object Dedup {
     docs.select(col(idCol).as("id"), col(SigIds).as("ids"), posexplode(col(SigBands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
-  /** Near-dup ingest of a [[withSignatures]] frame: its rows without a
-    * verified ≥ `minJaccard` near-duplicate in the signature `table`
-    * and without a smaller-id one among the batch rows the table does
-    * not already cover — [[minhashAgainstTable]], then [[minhashPairs]]
-    * and [[removeNearDups]] over the probe's survivors, all over the
-    * precomputed columns. A corpus hit on the row's own id is its own
-    * earlier append (ids are unique across stream and corpus), so a
-    * replayed batch still finds itself fresh.
+  /** The near-dup ingest removals of a [[withSignatures]] frame: the
+    * distinct ids (`id`) of its rows with a verified ≥ `minJaccard`
+    * near-duplicate in the signature `table` (a corpus hit, as
+    * [[minhashAgainstTable]] finds it) or with a smaller-id one among
+    * the rows that are not corpus hits ([[minhashPairs]], then
+    * [[removeNearDups]] over the probe's survivors), all over the
+    * precomputed columns. One row per removed id, so a pin of the
+    * result counts the stage exactly. A corpus hit on the row's own id
+    * is its own earlier append (ids are unique across stream and
+    * corpus), so a replayed batch still finds itself fresh.
     *
-    * Both probes run in ONE pinned execution, as (src, dst) removal
-    * edges: a corpus hit is (null, incoming id), a within-batch pair is
-    * (smaller id, larger id). A pair's larger id goes unless its smaller
-    * id is itself a corpus hit, which is exactly the pairs among the
-    * probe's survivors. The edge set's exact (small) count plans every
-    * anti-join as a broadcast. */
-  private[graft] def ingestNearDups(batch: DataFrame, idCol: String, table: String,
+    * The probe and the within-batch pairs are ONE band join: the
+    * batch's rows against the signature table's rows and their own, so
+    * the table is scanned once and the batch side is the one
+    * broadcast. The smaller-id rule is one grouping by each removal's
+    * cause: a corpus hit keys its own id, a within-batch pair keys its
+    * smaller id, and a key's group removes the key if it holds a hit,
+    * else its pairs' larger ids. */
+  private[graft] def ingestRemovals(batch: DataFrame, idCol: String, table: String,
                                     minJaccard: Double): DataFrame = {
     val rows = signatureRows(batch, idCol)
-    val hits = probeJoin(rows, batch.sparkSession.table(table), minJaccard)
-      .filter(col("incoming_id") =!= col("corpus_id"))
-      .select(lit(null).cast("long").as("src"), col("incoming_id").as("dst"))
-    val pairs = bandedPairs(
-        rows.select(col("id"), size(col("ids")).as("sz"), col("band"), col("bucket")),
-        batch.select(col(idCol).as("id"), col(SigIds).as("ids")), minJaccard)
-      .select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
-    // no distinct: duplicate edges change no anti-join
-    val edges = Lineage.pin(hits.union(pairs))
-    val removed = edges
-      .join(edges.filter(col("src").isNull).select(col("dst").as("__hit")),
-        col("src") === col("__hit"), "left_anti")
-      .select(col("dst").as("__drop_id"))
-    batch.join(removed, col(idCol) === col("__drop_id"), "left_anti")
+    val corpus = batch.sparkSession.table(table).select("id", "ids", "band", "bucket")
+      .withColumn("in_batch", lit(false))
+      .unionByName(rows.withColumn("in_batch", lit(true)))
+    val inBatch = col("in_batch")
+    collisions(rows, corpus, minJaccard, "in_batch")
+      .filter(when(inBatch, col("incoming_id") > col("corpus_id"))
+        .otherwise(col("incoming_id") =!= col("corpus_id")))
+      .groupBy(when(inBatch, col("corpus_id")).otherwise(col("incoming_id")).as("key"))
+      .agg(count(when(!inBatch, 1)).as("hits"),
+        collect_set(when(inBatch, col("incoming_id"))).as("larger"))
+      .select(explode(when(col("hits") > 0, array(col("key")))
+        .otherwise(col("larger"))).as("id"))
+      .distinct()
   }
 
   /** Append the signature rows of a [[withSignatures]] frame to
@@ -1853,19 +1863,49 @@ object Dedup {
     * trigger) pins it once and passes it to [[winnowedAgainstFps]]. */
   private[graft] def winnowRef(ref: DataFrame, refIdCol: String, refTextCol: String,
                                k: Int, w: Int): DataFrame =
-    ref.select(col(refIdCol).as("ref_id"),
-      winnow_fps(coalesce(col(refTextCol), lit("")), k, w).as("rfps"))
+    ref.select(col(refIdCol).as("ref_id"), winnowFps(refTextCol, k, w).as("rfps"))
+
+  private def winnowFps(textCol: String, k: Int, w: Int): Column =
+    winnow_fps(coalesce(col(textCol), lit("")), k, w)
 
   /** [[winnowedAgainst]] over a precomputed [[winnowRef]] frame `b`
     * (same k/w). */
   private[graft] def winnowedAgainstFps(docs0: DataFrame, idCol: String, textCol: String,
                                         b: DataFrame, k: Int, w: Int, minShared: Long,
                                         maxDf: Long): DataFrame = {
+    val docs = Lineage.pinDerived(docs0)
+    winnowMatches(docs.select(col(idCol).as("id"), winnowFps(textCol, k, w).as("fps")),
+      b, minShared, maxDf)
+  }
+
+  /** Column name of [[withWinnowFps]]. */
+  private[graft] val WinFps = "__win_fps"
+
+  /** `docs` plus [[WinFps]], the winnow fingerprints [[winnowedAgainst]]
+    * computes for a document, null where `where` is not true. The
+    * ingest path pins it beside the signature columns, so its winnow
+    * probe ([[winnowFlagged]]) reads the column instead of rerunning
+    * the kernel. */
+  private[graft] def withWinnowFps(docs: DataFrame, textCol: String, k: Int, w: Int,
+                                   where: Column = lit(true)): DataFrame =
+    docs.withColumn(WinFps, when(where, winnowFps(textCol, k, w)))
+
+  /** The distinct ids (`id`) of the rows of a [[withWinnowFps]] frame
+    * that [[winnowedAgainst]] flags against a [[winnowRef]] frame `b`
+    * (same k/w): the same candidates and verify, over the column, with
+    * the df cap counted over `docs`. */
+  private[graft] def winnowFlagged(docs: DataFrame, idCol: String, b: DataFrame,
+                                   minShared: Long, maxDf: Long): DataFrame =
+    winnowMatches(docs.select(col(idCol).as("id"), col(WinFps).as("fps")), b,
+        minShared, maxDf)
+      .select("id").distinct()
+
+  /** Candidates and verify of [[winnowedAgainst]]: document fingerprint
+    * sets `a` (id, fps) against reference sets `b` (ref_id, rfps). */
+  private def winnowMatches(a: DataFrame, b: DataFrame, minShared: Long,
+                            maxDf: Long): DataFrame = {
     require(minShared >= 1 && maxDf >= 1,
       s"minShared/maxDf must be >= 1, got $minShared/$maxDf")
-    val docs = Lineage.pinDerived(docs0)
-    val a = docs.select(col(idCol).as("id"),
-      winnow_fps(coalesce(col(textCol), lit("")), k, w).as("fps"))
     val pa = a.select(col("id"), explode(col("fps")).as("fp"))
     val pb = b.select(col("ref_id"), explode(col("rfps")).as("fp"))
     val dfa = pa.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -1932,8 +1972,7 @@ object Dedup {
 
   private def winnowSets(docs: DataFrame, idCol: String, textCol: String,
                          k: Int, w: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      winnow_fps(coalesce(col(textCol), lit("")), k, w).as("fps"))
+    docs.select(col(idCol).as("doc_id"), winnowFps(textCol, k, w).as("fps"))
 
   private def writeWinnowState(docs: DataFrame, idCol: String,
                                textCol: String, table: String, k: Int,

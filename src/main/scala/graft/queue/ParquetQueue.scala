@@ -191,6 +191,8 @@ class ParquetQueue(
     * cached rows (zipWithIndex's algorithm with its count reused).
     * The source is computed exactly once, so a non-deterministic
     * source can't disagree between the count and the written rows.
+    * A payload no larger than `spark.sql.files.maxPartitionBytes`
+    * (the size a scan reads as one split) is written as one file.
     * Returns the number pushed.
     */
   def push(df: DataFrame, lifetimeMs: Long = -1L,
@@ -207,11 +209,17 @@ class ParquetQueue(
       val n = counts.sum
       if (n > 0) {
         val starts = counts.scanLeft(first)(_ + _)
-        val rdd = rows.mapPartitionsWithIndex { (p, it) =>
+        val numbered = rows.mapPartitionsWithIndex { (p, it) =>
           it.zip(Iterator.iterate(starts(p))(_ + 1)).map { case (row, seq) =>
             Row.fromSeq(seq +: nowMs +: lifetimeMs +: row.toSeq)
           }
         }
+        // one file up to one read split: `select` plans a fresh read
+        // of the cache, whose size is measured now it is materialized
+        val rdd =
+          if (payload.select("*").queryExecution.optimizedPlan.stats.sizeInBytes <=
+              spark.sessionState.conf.filesMaxPartitionBytes) numbered.coalesce(1)
+          else numbered
         // Two-phase visibility: the segment is written under _staging
         // (overwrite clears any orphan of a crashed predecessor at the
         // same seq — it is uncommitted by definition), the highwater
@@ -618,7 +626,10 @@ class ParquetQueue(
 
   /** Structured Streaming subscriber over the same segment layout —
     * the reference's consume-process loop (Subscriber.pop in a while
-    * loop) becomes a declarative stream. */
+    * loop) becomes a declarative stream. A trigger reads at most
+    * `maxBatchesPerTrigger` parquet files; a push of up to one read
+    * split is one file, so for such pushes that is the number of
+    * segments and a trigger never splits one. */
   def readStream(maxBatchesPerTrigger: Int = 8): DataFrame =
     spark.readStream
       // the `batch` partition column is declared too: a stream started

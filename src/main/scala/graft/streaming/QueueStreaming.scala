@@ -1286,10 +1286,11 @@ object QueueStreaming {
     * stream-static join API can't express — and it mirrors the
     * reference's consume-loop (pop batch, process, commit) exactly.
     * Each document's signature is computed once per trigger, in the
-    * pin of the batch: the probe, the within-batch pairs and the
-    * append all read it. The probe broadcasts the (small) batch side
-    * against the table's scan, and the append adds one file per
-    * trigger.
+    * pin of the batch; one collect of the removed ids runs the probe
+    * and the within-batch pairs over those columns (the only scan of
+    * the signature table; the probe broadcasts the small batch side),
+    * and the survivors write and the signature append filter the
+    * pinned batch by those ids. The append adds one file per trigger.
     *
     * Exactly-once output: the parquet for batch N goes to
     * `outPath/batch=N` with overwrite, so a replayed batch after a
@@ -1311,13 +1312,49 @@ object QueueStreaming {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import graft.operators.{Dedup, Lineage, Scale}
         val b = Lineage.pin(Dedup.withSignatures(batch.toDF(), textCol, k, bands))
-        val kept = Lineage.pin(Dedup.ingestNearDups(b, idCol, sigTable, minJaccard))
+        val kept = without(b, idCol, valuesOf(Dedup.ingestRemovals(b, idCol, sigTable, minJaccard)))
         Scale.toFileSize(kept.drop(Dedup.SigBands, Dedup.SigIds))
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         Dedup.appendSigned(kept, idCol, sigTable)
       }
       .option("checkpointLocation", checkpoint)
       .start()
+
+  /** The values of `ids`' one column, collected: a trigger's removals
+    * are at most its rows, and removing them by value needs no join
+    * (so no broadcast job per frame that removes them). */
+  private def valuesOf(ids: DataFrame): Seq[Any] = ids.collect().map(_.get(0)).toSeq
+
+  /** `docs` without the rows whose `idCol` is among `ids` (a row with
+    * a null id stays, as under an anti-join). */
+  private def without(docs: DataFrame, idCol: String, ids: Seq[Any]): DataFrame =
+    if (ids.isEmpty) docs else docs.filter(!coalesce(col(idCol).isin(ids: _*), lit(false)))
+
+  /** Runs `sinks` together, each on a thread started for this call,
+    * and returns when all have finished, rethrowing the first failure
+    * in argument order. A thread inherits the Spark local properties
+    * of the thread that creates it (the stream's batch id, SQL
+    * execution id and job group), so a trigger's sinks run on threads
+    * of their own: a long-lived pool would tag their jobs with the
+    * trigger that started its threads. `StreamingQuery.stop()`
+    * interrupts the caller: the sinks are interrupted too, and the
+    * caller still waits for them before it rethrows, so no sink
+    * writes after the query has stopped. */
+  private def concurrently(sinks: (() => Unit)*): Unit = {
+    val failed = new Array[Throwable](sinks.size)
+    val threads = sinks.zipWithIndex.map { case (sink, i) =>
+      new Thread(() => try sink() catch { case e: Throwable => failed(i) = e })
+    }
+    threads.foreach(_.start())
+    var interrupted: Option[InterruptedException] = None
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case e: InterruptedException =>
+        if (interrupted.isEmpty) { interrupted = Some(e); threads.foreach(_.interrupt()) }
+      }
+    }
+    interrupted.foreach(throw _)
+    failed.find(_ != null).foreach(throw _)
+  }
 
   /** C13ak: streaming COMPOSED curation pipeline — the L111 batch
     * composition's ingest form. Each micro-batch runs the per-doc
@@ -1335,21 +1372,29 @@ object QueueStreaming {
     * funnel frame (stage_idx, stage, n_docs) commits beside the data
     * (`outPath/funnel/batch=N`) — the L111 observability contract,
     * summable across batches because every stage statistic is a
-    * plain count. Each document's work runs once per trigger: one pin
-    * of the batch ([[graft.operators.Lineage.pinAgg]]) computes the
-    * Gopher verdict and, for the docs it keeps, the MinHash signature
-    * columns, and observes the ingest and Gopher counts in the same
-    * job; the probe, the within-batch pairs and the signature append
-    * read those columns. The dedup and final survivors are pinned the
-    * same way (their pin action observes the stage's row count, so the
-    * funnel costs no count job of its own). What each stage removes
-    * is pinned as a small id set (the corpus hits and within-batch
-    * pairs in one execution, which is the only scan of the signature
-    * table; then the winnow hits), so every removal is a broadcast
-    * anti-join, and the eval suite's winnow fingerprints are pinned
-    * once per stream. Replay-safe: both outputs are own-partition
-    * overwrites; a replayed signature append collapses in the probe's
-    * candidate distinct. Mixture weights and packing stay downstream
+    * plain count.
+    *
+    * A trigger is three executions, then the three sinks started
+    * together ([[concurrently]]):
+    *  1. the pin of the batch ([[graft.operators.Lineage.pinAgg]],
+    *     fanned over the cores so a one-file segment does not run the
+    *     kernels serially) computes each document's Gopher verdict and,
+    *     for the docs it keeps, the MinHash signature columns and the
+    *     winnow fingerprints, and observes the ingest and Gopher counts;
+    *  2. a collect of the distinct ids the near-dup stage removes (the
+    *     corpus probe and the within-batch pairs over the signature
+    *     columns, the only scan of the signature table);
+    *  3. a collect of the distinct ids the winnow gate flags among the
+    *     Gopher-kept docs without those removals (the fingerprints'
+    *     df cap counts over exactly those docs; the eval suite's
+    *     fingerprints are pinned once per stream).
+    * The two id sets carry the funnel's dedup and winnow counts
+    * (n_gopher − removed, then − flagged), so no execution only
+    * counts, and the survivors write and the signature append filter
+    * the pinned batch by them, with no join. Replay-safe: both
+    * outputs are own-partition overwrites; a replayed signature append
+    * is ignored by the probe (a hit on the row's own id, see
+    * [[nearDupIngest]]). Mixture weights and packing stay downstream
     * consumers ([[mixtureReweightStream]], [[packStream]]) — they are
     * corpus-global decisions, not per-doc gates. */
   def pipelineStream(docs: DataFrame, idCol: String, textCol: String,
@@ -1367,40 +1412,33 @@ object QueueStreaming {
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        def pinCount(df: DataFrame): (DataFrame, Long) = {
-          val (pinned, vals) = Lineage.pinAgg(df, "n" -> count(lit(1)))
-          (pinned, vals("n").asInstanceOf[Long])
-        }
-        // stage 1: Gopher battery, fused with the signature kernels
-        // (computed for the kept docs only) into the batch's pin
+        // 1: the Gopher battery, fused with the signature and winnow
+        // kernels (computed for the kept docs only)
         val keep = "__gopher_keep"
         val (b, seen) = Lineage.pinAgg(
-          Dedup.withSignatures(
-            Curate.withGopherKeep(batch.toDF(), textCol, keep, stopWords),
-            textCol, k, bands, col(keep)),
+          Curate.withGopherKeep(Scale.fan(batch.toDF()), textCol, keep, stopWords)
+            .transform(Dedup.withSignatures(_, textCol, k, bands, col(keep)))
+            .transform(Dedup.withWinnowFps(_, textCol, winK, winW, col(keep))),
           "n_ingest" -> count(lit(1)), "n_gopher" -> count(when(col(keep), 1)))
         val g = b.filter(col(keep)).drop(keep)
-        // stage 2: near-dup ingest (corpus state probe + within-batch)
-        val (deduped, nDeduped) = pinCount(
-          Dedup.ingestNearDups(g, idCol, sigTable, minJaccard))
-        // stage 3: winnow decontamination vs the frozen suite; the
-        // flagged ids (one per matched eval doc: the anti-join needs no
-        // distinct) are pinned so the removal is a broadcast anti-join
-        val flagged = Lineage.pin(Dedup.winnowedAgainstFps(deduped, idCol, textCol,
-            ref, winK, winW, minShared, maxDf).select(col("id").as("__c_id")))
-        val (kept, nKept) = pinCount(deduped
-          .join(flagged, deduped(idCol) === col("__c_id"), "left_anti"))
-        Scale.toFileSize(kept.drop(Dedup.SigBands, Dedup.SigIds))
-          .write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId")
-        Dedup.appendSigned(kept, idCol, sigTable)
+        // 2: near-dup ingest (corpus state probe + within-batch)
+        val removed = valuesOf(Dedup.ingestRemovals(g, idCol, sigTable, minJaccard))
+        // 3: winnow decontamination of the survivors vs the frozen suite
+        val flagged = valuesOf(
+          Dedup.winnowFlagged(without(g, idCol, removed), idCol, ref, minShared, maxDf))
+        val nGopher = seen("n_gopher").asInstanceOf[Long]
+        val kept = without(g, idCol, removed ++ flagged)
         import spark.implicits._
-        Seq((0L, "ingest", seen("n_ingest").asInstanceOf[Long]),
-            (1L, "gopher", seen("n_gopher").asInstanceOf[Long]),
-            (2L, "dedup_ingest", nDeduped), (3L, "decontam_winnow", nKept))
+        val funnel = Seq((0L, "ingest", seen("n_ingest").asInstanceOf[Long]),
+            (1L, "gopher", nGopher), (2L, "dedup_ingest", nGopher - removed.size),
+            (3L, "decontam_winnow", nGopher - removed.size - flagged.size))
           .toDF("stage_idx", "stage", "n_docs")
-          .coalesce(1)
-          .write.mode("overwrite")
-          .parquet(s"$outPath/funnel/batch=$batchId")
+        concurrently(
+          () => Scale.toFileSize(kept.drop(Dedup.SigBands, Dedup.SigIds, Dedup.WinFps))
+            .write.mode("overwrite").parquet(s"$outPath/data/batch=$batchId"),
+          () => Dedup.appendSigned(kept, idCol, sigTable),
+          () => funnel.coalesce(1).write.mode("overwrite")
+            .parquet(s"$outPath/funnel/batch=$batchId"))
       }
       .option("checkpointLocation", checkpoint)
       .start()

@@ -112,6 +112,49 @@ class QueueSpec extends SparkSpec {
     q.dispose()
   }
 
+  private def segmentFiles(q: ParquetQueue): Map[Long, Int] = {
+    val segs = Paths.get(q.root, "data").toFile.listFiles().filter(_.getName.startsWith("batch="))
+    segs.map(d => d.getName.stripPrefix("batch=").toLong ->
+      d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+  }
+
+  test("a push smaller than one read split writes one file, whatever its partitioning") {
+    val q = fresh()
+    // 400 rows over 16 slices, as a local[16] session parallelizes them
+    val df = spark.sparkContext.parallelize((1L to 400L).map(i => (i, s"document $i text")), 16)
+      .toDF("id", "text")
+    assert(df.rdd.getNumPartitions == 16)
+    assert(q.push(df) == 400L)
+    assert(segmentFiles(q) == Map(0L -> 1), s"files per segment: ${segmentFiles(q)}")
+    assert(q.pop(400).map(_.getLong(0)) == (1L to 400L), "seq order survives the coalesce")
+    q.dispose()
+  }
+
+  test("readStream(2) triggers deliver whole segments") {
+    val q = fresh()
+    val sizes = Seq(5, 7, 3)
+    sizes.scanLeft(0)(_ + _).sliding(2).foreach { case Seq(lo, hi) =>
+      q.push(spark.sparkContext.parallelize((lo + 1 to hi).map(i => (i.toLong, s"t$i")), 4)
+        .toDF("id", "text"))
+    }
+    assert(segmentFiles(q).values.toSet == Set(1), s"files per segment: ${segmentFiles(q)}")
+    val out = Files.createTempDirectory("qwhole")
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[(Long, Long)])]()
+    val s = q.readStream(2).writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        got.add(id -> b.groupBy("batch").count().as[(Long, Long)].collect().toSeq.sorted); ()
+      }
+      .option("checkpointLocation", out.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    s.awaitTermination(60000)
+    import scala.jdk.CollectionConverters._
+    val triggers = got.asScala.toSeq.sortBy(_._1).map(_._2).filter(_.nonEmpty)
+    // segments start at seqs 0, 5, 12: two per trigger, each whole
+    assert(triggers == Seq(Seq(0L -> 5L, 5L -> 7L), Seq(12L -> 3L)), s"per-trigger segments: $triggers")
+    q.dispose()
+  }
+
   test("a 0-row push writes nothing and leaves the highwater unchanged") {
     val q = fresh()
     q.push(Seq((1L, "a")).toDF("id", "text"))

@@ -557,6 +557,213 @@ class StreamingSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS pipe_sigs")
   }
 
+  /** `n` seeded words, none shared with other draws (2^30 choices). */
+  private def draw(rng: java.util.SplittableRandom, n: Int): Seq[String] =
+    Seq.fill(n)("w" + rng.nextInt(1 << 30).toHexString)
+
+  /** A Gopher-passing text (both stop words, then `ws`). */
+  private def doc(ws: Seq[String]): String = ("the a" +: ws).mkString(" ")
+
+  test("pipeline stream trigger: three executions, then concurrent sinks") {
+    import graft.operators.Dedup
+    import graft.queue.ParquetQueue
+    import graft.schema.{GraftSchema, GraftType}
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val rng = new java.util.SplittableRandom(7L)
+    val passage = draw(rng, 40)
+    val corpus = Seq.tabulate(4)(i => (i.toLong + 1, doc(draw(rng, 60))))
+    def batch(lo: Int): Seq[(Long, String)] = {
+      val fresh = Seq.tabulate(36)(i => (lo + i.toLong, doc(draw(rng, 60))))
+      fresh ++ Seq(
+        (lo + 36L, corpus(lo % 4)._2),                      // corpus dup
+        (lo + 37L, fresh.head._2 + " tail"),                // within-batch dup
+        (lo + 38L, doc(draw(rng, 30) ++ passage)),          // quotes the eval doc
+        (lo + 39L, "too short"))                            // Gopher fail
+    }
+    val schema = GraftSchema(("doc_id", GraftType.INTEGER), ("text", GraftType.TEXT))
+    val q = new ParquetQueue(spark, Files.createTempDirectory("pipe_q").toString, schema)
+    try {
+      Dedup.buildSignatureTable(corpus.toDF("doc_id", "text"), "doc_id", "text", "pipe3_sigs")
+      val eval = Seq((9001L, doc(passage))).toDF("doc_id", "text")
+      val out = Files.createTempDirectory("pipe3_out").toString
+      val ckpt = Files.createTempDirectory("pipe3_ckpt").toString
+      val (sq, starts) = startsDuring {
+        q.push(batch(100).toDF("doc_id", "text"))
+        val sq = QueueStreaming.pipelineStream(q.readStream().select("doc_id", "text"),
+          "doc_id", "text", eval, "pipe3_sigs", out, ckpt, stopWords = Seq("the", "a"))
+        sq.processAllAvailable()
+        q.push(batch(200).toDF("doc_id", "text"))
+        sq.processAllAvailable()
+        sq.stop()
+        sq
+      }
+      val group = sq.runId.toString
+      val execs = starts.collect {
+        case e: SparkListenerSQLExecutionStart if e.jobGroupId.contains(group) => e
+      }
+      def trigger(e: SparkListenerSQLExecutionStart) =
+        "batch = (\\d+)".r.findFirstMatchIn(e.description).map(_.group(1).toInt)
+      val byTrigger = execs.groupBy(trigger)
+      assert(byTrigger.keySet == Set(Some(0), Some(1)), s"triggers: ${byTrigger.keySet}")
+      // a sink is a write command (an append is three nested ones);
+      // the trigger's own root execution runs no job
+      def sink(e: SparkListenerSQLExecutionStart) =
+        "Execute \\w+Command".r.findFirstIn(e.physicalPlanDescription).isDefined
+      byTrigger.foreach { case (t, es) =>
+        val before = es.takeWhile(!sink(_)).filterNot(e => e.rootExecutionId.contains(e.executionId))
+        assert(before.size <= 3, s"trigger $t: ${before.size} executions before its sinks")
+        val winnow = es.filter(_.physicalPlanDescription.contains("winnow_fps"))
+        assert(winnow.size == 1 && winnow.head.physicalPlanDescription.contains("gopher_stats") &&
+          winnow.head.physicalPlanDescription.contains("minhash_band_hashes"),
+          s"trigger $t: winnow_fps computed in executions ${winnow.map(_.executionId)}, not only the batch pin")
+      }
+      val jobs = starts.collect {
+        case j: SparkListenerJobStart if j.properties.getProperty("spark.jobGroup.id") == group =>
+          j.properties.getProperty("streaming.sql.batchId")
+      }.groupBy(identity).map { case (b, js) => b -> js.size }
+      // batch pin 2 (its fan shuffle), removed ids 4, flagged ids 8, sinks 3
+      assert(jobs.keySet == Set("0", "1") && jobs.values.forall(_ <= 18), s"jobs per trigger: $jobs")
+      // both sinks landed: the clean docs survive, the planted ones do not
+      val kept = spark.read.parquet(s"$out/data").select("doc_id").as[Long].collect().toSet
+      assert(kept == (Seq(100L, 200L).flatMap(lo => lo until lo + 36)).toSet, s"survivors: $kept")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS pipe3_sigs")
+      q.dispose()
+    }
+  }
+
+  test("pipeline stream stopped during its sinks writes nothing after stop returns") {
+    import graft.operators.Dedup
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    implicit val sq = spark.sqlContext
+    val rng = new java.util.SplittableRandom(5L)
+    val corpus = Seq((1L, doc(draw(rng, 60)))).toDF("doc_id", "text")
+    val eval = Seq((9001L, doc(draw(rng, 60)))).toDF("doc_id", "text")
+    val mem = MemoryStream[(Long, String)]
+    val out = Files.createTempDirectory("pipe_stop_out").toString
+    val ckpt = Files.createTempDirectory("pipe_stop_ckpt").toString
+    @volatile var group = ""
+    val stopper = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    try {
+      Dedup.buildSignatureTable(corpus, "doc_id", "text", "pipe_stop_sigs")
+      val sigDir = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("pipe_stop_sigs")).location)
+      val sq = QueueStreaming.pipelineStream(mem.toDF().toDF("doc_id", "text"), "doc_id",
+        "text", eval, "pipe_stop_sigs", out, ckpt, stopWords = Seq("the", "a"))
+      group = sq.runId.toString
+      // stop the query as soon as a sink's write command starts
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) &&
+              x.physicalPlanDescription.contains("Execute InsertIntoHadoopFsRelationCommand") =>
+            val t = new Thread(() => sq.stop())
+            if (stopper.compareAndSet(null, t)) t.start()
+          case _ =>
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        mem.addData(Seq.tabulate(40)(i => (10L + i, doc(draw(rng, 60)))): _*)
+        sq.awaitTermination(120000)
+        assert(stopper.get != null, "no sink started")
+        stopper.get.join(120000)
+        assert(!sq.isActive, "the query did not stop")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      def written(): Map[String, Long] = Seq(new java.io.File(out), sigDir).flatMap { d =>
+        Files.walk(d.toPath).toArray.map(_.asInstanceOf[java.nio.file.Path].toFile)
+          .map(f => f.getPath -> (if (f.isFile) f.length else -1L))
+      }.toMap
+      val atStop = written()
+      Thread.sleep(3000)
+      assert(written() == atStop, "files changed after stop() returned")
+    } finally spark.sql("DROP TABLE IF EXISTS pipe_stop_sigs")
+  }
+
+  test("pipeline stream equals the public operators composed per trigger") {
+    import graft.operators.{Curate, Dedup}
+    implicit val sq = spark.sqlContext
+    val rng = new java.util.SplittableRandom(11L)
+    val maxDf = 2L
+    val passage = draw(rng, 40)
+    def edit(ws: Seq[String], at: Seq[Int]): Seq[String] =
+      ws.zipWithIndex.map { case (w, i) => if (at.contains(i)) draw(rng, 1).head else w }
+    val c = Seq.fill(3)(draw(rng, 60))
+    val cp = draw(rng, 30) ++ passage // a corpus doc quoting the eval doc
+    val corpus = (c :+ cp).zipWithIndex.map { case (ws, i) => (i.toLong + 1, doc(ws)) }
+    val v = edit(c(1), Seq(1, 2, 3))  // J(v, c1) = 57/63
+    val w = edit(v, Seq(10, 11, 12))  // J(w, v) = 57/63, J(w, c1) = 54/66
+    val d100 = draw(rng, 60)
+    val d203 = draw(rng, 60)
+    val q301 = draw(rng, 30) ++ passage
+    def fill(lo: Long, n: Int) = Seq.tabulate(n)(i => (lo + i, doc(draw(rng, 60))))
+    val batches = Seq(
+      Seq((100L, doc(d100)),
+        (101L, "too short"),                      // Gopher fail
+        (102L, doc(c(0))),                        // corpus dup
+        (103L, doc(edit(d100, Seq(5, 6)))),       // within-batch dup of 100
+        (104L, doc(v)),                           // corpus hit
+        (105L, doc(w)),                           // dup of the hit 104 only: stays
+        (106L, doc(draw(rng, 30) ++ passage)),    // eval quote; its passage fps have
+        (107L, doc(cp)),                          // df 3 with these two corpus hits
+        (108L, doc(cp))) ++ fill(110L, 8),        // and df 1 without them
+      Seq((200L, doc(edit(d100, Seq(40)))),       // dup of a trigger-0 survivor
+        (201L, doc(draw(rng, 30) ++ passage)),
+        (202L, doc(edit(d100, Seq(5, 6)))),       // another near-dup of 100
+        (203L, doc(d203)),
+        (204L, doc(edit(d203, Seq(7)))),          // within-batch dups of 203
+        (205L, doc(edit(d203, Seq(8))))) ++ fill(210L, 8),
+      Seq((300L, doc(w)),                         // dup of the trigger-0 survivor 105
+        (301L, doc(q301)),                        // eval quote ...
+        (302L, doc(edit(q301, Seq(0)))),          // ... and its within-batch dup
+        (303L, "the a short")) ++ fill(310L, 8))
+    val eval = Seq((9001L, doc(passage))).toDF("doc_id", "text")
+    val stop = Seq("the", "a")
+    try {
+      Seq("exact_sigs", "exact_ref_sigs").foreach(t =>
+        Dedup.buildSignatureTable(corpus.toDF("doc_id", "text"), "doc_id", "text", t))
+      // the reference: the parent's composition of the public operators
+      val ref = batches.map { rows =>
+        val batch = rows.toDF("doc_id", "text")
+        def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().toSet
+        def only(s: Set[Long]) = batch.filter(col("doc_id").isin(s.toSeq: _*))
+        val g = ids(Curate.gopherFlags(batch, "doc_id", "text", stopWords = stop)
+          .filter(col("keep") === 1).select("doc_id"))
+        val hits = ids(Dedup.minhashAgainstTable(only(g), "doc_id", "text", "exact_ref_sigs")
+          .filter(col("incoming_id") =!= col("corpus_id")).select("incoming_id"))
+        val pairs = Dedup.minhashPairs(only(g), "doc_id", "text", minJaccard = 0.9)
+          .select("doc_id1", "doc_id2").as[(Long, Long)].collect()
+        val deduped = g -- hits -- pairs.collect { case (a, b) if !hits(a) => b }
+        val flagged = ids(Dedup.winnowedAgainst(only(deduped), "doc_id", "text", eval,
+          "doc_id", "text", maxDf = maxDf).select("id"))
+        val kept = deduped -- flagged
+        Dedup.appendSignatures(only(kept), "doc_id", "text", "exact_ref_sigs")
+        (kept, Map("ingest" -> rows.size.toLong, "gopher" -> g.size.toLong,
+          "dedup_ingest" -> deduped.size.toLong, "decontam_winnow" -> kept.size.toLong))
+      }
+      // the planted cases do what they are planted for
+      assert(ref(0)._1 == Set(100L, 105L) ++ (110L until 118L), s"trigger 0: ${ref(0)._1}")
+      assert(ref(1)._1 == Set(203L) ++ (210L until 218L), s"trigger 1: ${ref(1)._1}")
+      assert(ref(2)._1 == (310L until 318L).toSet, s"trigger 2: ${ref(2)._1}")
+      val mem = MemoryStream[(Long, String)]
+      val out = Files.createTempDirectory("exact_out").toString
+      val ckpt = Files.createTempDirectory("exact_ckpt").toString
+      val q = QueueStreaming.pipelineStream(mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        eval, "exact_sigs", out, ckpt, stopWords = stop, maxDf = maxDf)
+      batches.foreach { rows => mem.addData(rows: _*); q.processAllAvailable() }
+      q.stop()
+      batches.indices.foreach { t =>
+        val kept = spark.read.parquet(s"$out/data/batch=$t").select("doc_id").as[Long].collect().toSet
+        assert(kept == ref(t)._1, s"trigger $t survivors")
+        val funnel = spark.read.parquet(s"$out/funnel/batch=$t").select("stage", "n_docs")
+          .as[(String, Long)].collect().toMap
+        assert(funnel == ref(t)._2, s"trigger $t funnel")
+      }
+      def sigRows(t: String) = spark.table(t).select("id", "band", "bucket", "ids")
+        .as[(Long, Int, Long, Seq[Long])].collect().toSeq.sortBy(r => (r._1, r._2))
+      assert(sigRows("exact_sigs") == sigRows("exact_ref_sigs"), "signature tables differ")
+    } finally Seq("exact_sigs", "exact_ref_sigs").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("containment ingest drops quoted excerpts, keeps supersets") {
     import graft.operators.Dedup
     implicit val sq = spark.sqlContext
