@@ -29,7 +29,7 @@ object CoLocated {
     require(keys.nonEmpty, "at least one bucket key")
     // fresh catalog over an old warehouse dir: clear the leftover
     // managed location or this rebuild trips LOCATION_ALREADY_EXISTS
-    Lexical.dropManaged(df.sparkSession, table)
+    ManagedTable.drop(df.sparkSession, table)
     df.write.mode("overwrite")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)

@@ -269,15 +269,11 @@ object Curate {
   def dsirModel(docs: DataFrame, idCol: String, textCol: String,
                 isTarget: Column, buckets: Int = 1024): DataFrame = {
     require(buckets >= 2, s"need >= 2 feature buckets, got $buckets")
-    val feats = docs.select(col(idCol).as("doc_id"), isTarget.as("is_t"))
-      .join(dsirFeatures(docs, idCol, textCol, buckets), Seq("doc_id"))
     // pinned B-row counts: the totals below are Σ over the counts, so
     // deriving them from cnt instead of feats costs a B-row re-read —
     // the unpinned form ran the corpus feature explode TWICE (counts
     // pass + totals pass)
-    val cnt = pinBuckets(feats.groupBy("f").agg(
-        sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
-        count(lit(1)).as("cr")), buckets)
+    val cnt = pinBuckets(dsirCounts(docs, idCol, textCol, isTarget, buckets), buckets)
     // totals land driver-side: two scalars become plan literals (no
     // 1-row cross join in every downstream plan), and an importance
     // model with an EMPTY target can fail loudly instead of silently
@@ -336,54 +332,56 @@ object Curate {
     require(buckets >= 2, s"need >= 2 feature buckets, got $buckets")
     val spark = docs.sparkSession
     Seq("counts", "totals").foreach(p =>
-      Lexical.dropManaged(spark, s"${table}_dsir_$p"))
-    val feats = docs.select(col(idCol).as("doc_id"), isTarget.as("is_t"))
-      .join(dsirFeatures(docs, idCol, textCol, buckets), Seq("doc_id"))
-    feats.groupBy("f").agg(
-        sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
-        count(lit(1)).as("cr"))
+      ManagedTable.drop(spark, s"${table}_dsir_$p"))
+    dsirCounts(docs, idCol, textCol, isTarget, buckets)
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_dsir_counts")
-    // totals derive from the COMMITTED counts (no second corpus pass)
-    spark.table(s"${table}_dsir_counts")
-      .agg(coalesce(sum("ct"), lit(0L)).as("nt"),
-        coalesce(sum("cr"), lit(0L)).as("nr"))
+    dsirTotals(spark, table)
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_dsir_totals")
   }
 
-  /** Fold a new batch into the persisted counts: aggregate the BATCH
-    * only, full-outer merge with the committed B rows, rewrite both
-    * tiny tables. After the append, [[dsirModelFromCounts]] equals a
-    * from-scratch [[buildDsirCounts]] over the union exactly. */
-  def appendDsirCounts(batch: DataFrame, idCol: String, textCol: String,
-                       isTarget: Column, table: String,
-                       buckets: Int = 1024): Unit = {
-    val spark = batch.sparkSession
-    val feats = batch.select(col(idCol).as("doc_id"), isTarget.as("is_t"))
-      .join(dsirFeatures(batch, idCol, textCol, buckets), Seq("doc_id"))
-    val inc = feats.groupBy("f").agg(
-      sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
-      count(lit(1)).as("cr"))
-    // materialize BEFORE dropping the source (never read-while-overwrite)
-    val merged = spark.table(s"${table}_dsir_counts")
+  /** The (f, ct, cr) bucket counts of a document frame: ct its target
+    * rows, cr all its rows, per feature bucket. */
+  private def dsirCounts(docs: DataFrame, idCol: String, textCol: String,
+                         isTarget: Column, buckets: Int): DataFrame =
+    docs.select(col(idCol).as("doc_id"), isTarget.as("is_t"))
+      .join(dsirFeatures(docs, idCol, textCol, buckets), Seq("doc_id"))
+      .groupBy("f").agg(
+        sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
+        count(lit(1)).as("cr"))
+
+  /** The one-row (nt, nr) totals, derived from the COMMITTED counts (no
+    * second corpus pass). */
+  private def dsirTotals(spark: SparkSession, table: String): DataFrame =
+    spark.table(s"${table}_dsir_counts")
+      .agg(coalesce(sum("ct"), lit(0L)).as("nt"),
+        coalesce(sum("cr"), lit(0L)).as("nr"))
+
+  /** The committed counts full-outer merged with a batch's counts `inc`
+    * bucket by bucket, combined by `op` (+ to append, − to remove). */
+  private def dsirMerged(spark: SparkSession, table: String, inc: DataFrame,
+                         op: (Column, Column) => Column): DataFrame =
+    spark.table(s"${table}_dsir_counts")
       .select(col("f"), col("ct").as("ct0"), col("cr").as("cr0"))
       .join(inc.select(col("f"), col("ct").as("ct1"), col("cr").as("cr1")),
         Seq("f"), "full_outer")
       .select(col("f"),
-        (coalesce(col("ct0"), lit(0L)) + coalesce(col("ct1"), lit(0L))).as("ct"),
-        (coalesce(col("cr0"), lit(0L)) + coalesce(col("cr1"), lit(0L))).as("cr"))
-      .transform(graft.operators.Lineage.pin)
-    Lexical.dropManaged(spark, s"${table}_dsir_counts")
-    merged.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_dsir_counts")
-    val tot = spark.table(s"${table}_dsir_counts")
-      .agg(coalesce(sum("ct"), lit(0L)).as("nt"),
-        coalesce(sum("cr"), lit(0L)).as("nr"))
-      .transform(graft.operators.Lineage.pin)
-    Lexical.dropManaged(spark, s"${table}_dsir_totals")
-    tot.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_dsir_totals")
+        op(coalesce(col("ct0"), lit(0L)), coalesce(col("ct1"), lit(0L))).as("ct"),
+        op(coalesce(col("cr0"), lit(0L)), coalesce(col("cr1"), lit(0L))).as("cr"))
+
+  /** Fold a new batch into the persisted counts: aggregate the BATCH
+    * only, full-outer merge with the committed B rows, rewrite both
+    * tiny tables by [[ManagedTable.replace]]. After the append,
+    * [[dsirModelFromCounts]] equals a from-scratch [[buildDsirCounts]]
+    * over the union exactly. */
+  def appendDsirCounts(batch: DataFrame, idCol: String, textCol: String,
+                       isTarget: Column, table: String,
+                       buckets: Int = 1024): Unit = {
+    val spark = batch.sparkSession
+    ManagedTable.replace(spark, s"${table}_dsir_counts", dsirMerged(spark, table,
+      dsirCounts(batch, idCol, textCol, isTarget, buckets), _ + _))
+    ManagedTable.replace(spark, s"${table}_dsir_totals", dsirTotals(spark, table))
   }
 
   /** L46d: remove a batch from the persisted counts — the ERASURE twin
@@ -399,34 +397,16 @@ object Curate {
                        isTarget: Column, table: String,
                        buckets: Int = 1024): Unit = {
     val spark = batch.sparkSession
-    val feats = batch.select(col(idCol).as("doc_id"), isTarget.as("is_t"))
-      .join(dsirFeatures(batch, idCol, textCol, buckets), Seq("doc_id"))
-    val dec = feats.groupBy("f").agg(
-      sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
-      count(lit(1)).as("cr"))
-    val merged = spark.table(s"${table}_dsir_counts")
-      .select(col("f"), col("ct").as("ct0"), col("cr").as("cr0"))
-      .join(dec.select(col("f"), col("ct").as("ct1"), col("cr").as("cr1")),
-        Seq("f"), "full_outer")
-      .select(col("f"),
-        (coalesce(col("ct0"), lit(0L)) - coalesce(col("ct1"), lit(0L))).as("ct"),
-        (coalesce(col("cr0"), lit(0L)) - coalesce(col("cr1"), lit(0L))).as("cr"))
+    // read twice: the negative-count check and the rewrite
+    val merged = dsirMerged(spark, table,
+        dsirCounts(batch, idCol, textCol, isTarget, buckets), _ - _)
       .transform(graft.operators.Lineage.pin)
     val bad = merged.filter(col("ct") < 0 || col("cr") < 0).count()
     require(bad == 0,
       s"$table: removing a batch that exceeds the committed counts " +
         s"($bad buckets would go negative) — was this batch ever added?")
-    val survivors = merged.filter(col("cr") > 0).transform(graft.operators.Lineage.pin)
-    Lexical.dropManaged(spark, s"${table}_dsir_counts")
-    survivors.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_dsir_counts")
-    val tot = spark.table(s"${table}_dsir_counts")
-      .agg(coalesce(sum("ct"), lit(0L)).as("nt"),
-        coalesce(sum("cr"), lit(0L)).as("nr"))
-      .transform(graft.operators.Lineage.pin)
-    Lexical.dropManaged(spark, s"${table}_dsir_totals")
-    tot.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_dsir_totals")
+    ManagedTable.replace(spark, s"${table}_dsir_counts", merged.filter(col("cr") > 0))
+    ManagedTable.replace(spark, s"${table}_dsir_totals", dsirTotals(spark, table))
   }
 
   /** Derive the (f, qf) ratio model from the persisted counts — same

@@ -1240,7 +1240,7 @@ object Dedup {
     * match nothing). */
   def buildSignatureTable(corpus: DataFrame, idCol: String, textCol: String,
                           table: String, k: Int = 64, bands: Int = 8): Unit = {
-    Lexical.dropManaged(corpus.sparkSession, table)
+    ManagedTable.drop(corpus.sparkSession, table)
     bandedSignatures(corpus, idCol, textCol, k, bands)
       .write.mode("overwrite").format("parquet").saveAsTable(table)
   }
@@ -1333,10 +1333,18 @@ object Dedup {
   def buildPairTable(df: DataFrame, idCol: String, textCol: String,
                      blockCols: Seq[String], table: String,
                      minJaccard: Double, parallelBuckets: Int = 16,
-                     shingleN: Int = 1): Unit = {
-    // a fresh session over an old warehouse dir must not trip
-    // LOCATION_ALREADY_EXISTS on the leftover managed location
-    Lexical.dropManaged(df.sparkSession, table)
+                     shingleN: Int = 1): Unit =
+    buildPairs(df, idCol, textCol, blockCols, table, minJaccard,
+      parallelBuckets, shingleN, partCol = None)
+
+  /** The pair table `table` and its token-set sidecar `<table>_toks`
+    * of [[buildPairTable]] (`partCol` None) and
+    * [[buildGroupedPairTable]] (the tenant column, kept on every pair
+    * row and partitioning both tables). */
+  private def buildPairs(df: DataFrame, idCol: String, textCol: String,
+                         blockCols: Seq[String], table: String,
+                         minJaccard: Double, parallelBuckets: Int,
+                         shingleN: Int, partCol: Option[String]): Unit = {
     // REBALANCE before the write (guide §6 output sizing): the pair
     // frame's final stage inherits the salted join's partitioning —
     // r16's fanned kernel left a 1 MB table in 15 shards, and every
@@ -1344,16 +1352,19 @@ object Dedup {
     // inherited that fragmentation in every round frame. AQE sizes the
     // rebalanced output to advisoryPartitionSizeInBytes, so the same
     // line writes few-hundred-MB shards at production volume.
-    jaccardPairs(df, idCol, textCol, blockCols, minJaccard, parallelBuckets,
-      shingleN)
-      .hint("rebalance")
-      .write.mode("overwrite").format("parquet").saveAsTable(table)
+    def write(rows: DataFrame, t: String): Unit = {
+      // a fresh session over an old warehouse dir must not trip
+      // LOCATION_ALREADY_EXISTS on the leftover managed location
+      ManagedTable.drop(df.sparkSession, t)
+      val w = rows.hint("rebalance", partCol.map(col).toSeq: _*)
+        .write.mode("overwrite").format("parquet")
+      partCol.fold(w)(w.partitionBy(_)).saveAsTable(t)
+    }
+    write(jaccardPairs(df, idCol, textCol, blockCols, minJaccard,
+      parallelBuckets, shingleN, keepBlocks = partCol.isDefined), table)
     // the token-set sidecar makes the graph APPENDABLE: incremental
     // maintenance needs the corpus side's exact sets, not its text
-    Lexical.dropManaged(df.sparkSession, s"${table}_toks")
-    pairToks(df, idCol, textCol, blockCols, shingleN)
-      .hint("rebalance")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_toks")
+    write(pairToks(df, idCol, textCol, blockCols, shingleN), s"${table}_toks")
   }
 
   private def pairToks(df: DataFrame, idCol: String, textCol: String,
@@ -1404,7 +1415,17 @@ object Dedup {
   def appendToPairTable(batch: DataFrame, idCol: String, textCol: String,
                         blockCols: Seq[String], table: String,
                         minJaccard: Double, parallelBuckets: Int = 16,
-                        shingleN: Int = 1): Unit = {
+                        shingleN: Int = 1): Unit =
+    appendPairs(batch, idCol, textCol, blockCols, table, minJaccard,
+      parallelBuckets, shingleN, partCol = None)
+
+  /** [[appendToPairTable]] (`partCol` None) and
+    * [[appendToGroupedPairTable]] (the tenant column, kept on every new
+    * pair row and partitioning both appends). */
+  private def appendPairs(batch: DataFrame, idCol: String, textCol: String,
+                          blockCols: Seq[String], table: String,
+                          minJaccard: Double, parallelBuckets: Int,
+                          shingleN: Int, partCol: Option[String]): Unit = {
     require(minJaccard > 0.0 && minJaccard <= 1.0,
       s"minJaccard must be in (0, 1], got $minJaccard")
     val spark = batch.sparkSession
@@ -1419,9 +1440,10 @@ object Dedup {
       .distinct()
       .join(spark.table(s"${table}_toks").select("id"), Seq("id"), "left_anti")
       .limit(1).count()
+    val builder = if (partCol.isEmpty) "buildPairTable" else "buildGroupedPairTable"
     require(desynced == 0L,
       s"$table has pair rows missing from ${table}_toks (a prior append " +
-        "failed between its two writes) — rebuild with buildPairTable")
+        s"failed between its two writes) — rebuild with $builder")
     val logR = math.log(1.0 / math.max(0.05, minJaccard - 0.001))
     val bandDelta = math.floor(math.log(1.0 / minJaccard) / logR).toInt + 1
     def banded(t: DataFrame) = t.withColumn("band",
@@ -1439,17 +1461,21 @@ object Dedup {
     val b = banded(spark.table(s"${table}_toks")).as("b")
     val blockEq = blockCols.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
     val cross = a.join(b, blockEq && col("a.bandm") === col("b.band"))
-      .select(least(col("a.id"), col("b.id")).as("doc_id1"),
+      .select(Seq(least(col("a.id"), col("b.id")).as("doc_id1"),
         greatest(col("a.id"), col("b.id")).as("doc_id2"),
-        col("a.ids").as("ids1"), col("b.ids").as("ids2"))
+        col("a.ids").as("ids1"), col("b.ids").as("ids2")) ++
+        partCol.map(c => col(s"a.$c")): _*)
       .withColumn("jac", jacCol)
       .filter(col("jac") >= minJaccard)
-      .select("doc_id1", "doc_id2", "jac")
+      .select((Seq("doc_id1", "doc_id2", "jac") ++ partCol).map(col): _*)
     val within = jaccardPairs(batch, idCol, textCol, blockCols, minJaccard,
-      parallelBuckets, shingleN)
-    within.unionByName(cross)
-      .write.mode("append").format("parquet").saveAsTable(table)
-    bToks.write.mode("append").format("parquet").saveAsTable(s"${table}_toks")
+      parallelBuckets, shingleN, keepBlocks = partCol.isDefined)
+    def append(rows: DataFrame, t: String): Unit = {
+      val w = rows.write.mode("append").format("parquet")
+      partCol.fold(w)(w.partitionBy(_)).saveAsTable(t)
+    }
+    append(within.unionByName(cross), table)
+    append(bToks, s"${table}_toks")
   }
 
   /** L66b: grouped (multi-tenant) pair graph — [[buildPairTable]] with
@@ -1462,18 +1488,9 @@ object Dedup {
   def buildGroupedPairTable(df: DataFrame, idCol: String, textCol: String,
                             groupCol: String, table: String,
                             minJaccard: Double, parallelBuckets: Int = 16,
-                            shingleN: Int = 1): Unit = {
-    val spark = df.sparkSession
-    Lexical.dropManaged(spark, table)
-    jaccardPairs(df, idCol, textCol, Seq(groupCol), minJaccard,
-        parallelBuckets, shingleN, keepBlocks = true)
-      .write.mode("overwrite").partitionBy(groupCol)
-      .format("parquet").saveAsTable(table)
-    Lexical.dropManaged(spark, s"${table}_toks")
-    pairToks(df, idCol, textCol, Seq(groupCol), shingleN)
-      .write.mode("overwrite").partitionBy(groupCol)
-      .format("parquet").saveAsTable(s"${table}_toks")
-  }
+                            shingleN: Int = 1): Unit =
+    buildPairs(df, idCol, textCol, Seq(groupCol), table, minJaccard,
+      parallelBuckets, shingleN, partCol = Some(groupCol))
 
   /** Incremental maintenance of a [[buildGroupedPairTable]] graph —
     * [[appendToPairTable]] semantics (within-batch + batch×corpus via
@@ -1485,78 +1502,29 @@ object Dedup {
                                textCol: String, groupCol: String,
                                table: String, minJaccard: Double,
                                parallelBuckets: Int = 16,
-                               shingleN: Int = 1): Unit = {
-    require(minJaccard > 0.0 && minJaccard <= 1.0,
-      s"minJaccard must be in (0, 1], got $minJaccard")
-    val spark = batch.sparkSession
-    val desynced = spark.table(table)
-      .select(explode(array(col("doc_id1"), col("doc_id2"))).as("id"))
-      .distinct()
-      .join(spark.table(s"${table}_toks").select("id"), Seq("id"), "left_anti")
-      .limit(1).count()
-    require(desynced == 0L,
-      s"$table has pair rows missing from ${table}_toks (a prior append " +
-        "failed between its two writes) — rebuild with buildGroupedPairTable")
-    val logR = math.log(1.0 / math.max(0.05, minJaccard - 0.001))
-    val bandDelta = math.floor(math.log(1.0 / minJaccard) / logR).toInt + 1
-    def banded(t: DataFrame) = t.withColumn("band",
-      floor(log(greatest(size(col("ids")), lit(1)).cast("double")) / logR)
-        .cast("int"))
-    val bToks = pairToks(batch, idCol, textCol, Seq(groupCol), shingleN)
-      .transform(graft.operators.Lineage.pin)
-    val a = banded(bToks)
-      .withColumn("bandm",
-        explode(sequence(col("band") - bandDelta, col("band") + bandDelta)))
-      .as("a")
-    val b = banded(spark.table(s"${table}_toks")).as("b")
-    val cross = a.join(b, col(s"a.$groupCol") === col(s"b.$groupCol") &&
-        col("a.bandm") === col("b.band"))
-      .select(least(col("a.id"), col("b.id")).as("doc_id1"),
-        greatest(col("a.id"), col("b.id")).as("doc_id2"),
-        col("a.ids").as("ids1"), col("b.ids").as("ids2"),
-        col(s"a.$groupCol"))
-      .withColumn("jac", jacCol)
-      .filter(col("jac") >= minJaccard)
-      .select("doc_id1", "doc_id2", "jac", groupCol)
-    val within = jaccardPairs(batch, idCol, textCol, Seq(groupCol),
-      minJaccard, parallelBuckets, shingleN, keepBlocks = true)
-    within.unionByName(cross)
-      .write.mode("append").partitionBy(groupCol)
-      .format("parquet").saveAsTable(table)
-    bToks.write.mode("append").partitionBy(groupCol)
-      .format("parquet").saveAsTable(s"${table}_toks")
-  }
+                               shingleN: Int = 1): Unit =
+    appendPairs(batch, idCol, textCol, Seq(groupCol), table, minJaccard,
+      parallelBuckets, shingleN, partCol = Some(groupCol))
 
   /** Erase ids from a persisted pair table (+ its `_toks` sidecar):
     * the pair graph holds DERIVED content of erased docs (their exact
     * token sets in the sidecar, their similarity relations in the pair
     * rows), so a takedown that skips it leaks through every dedup
     * report and through future appends' cross joins. Drops every pair
-    * touching an erased id and the sidecar rows; the same
-    * write-then-swap discipline as [[removeSignatures]] so a failure
-    * mid-erasure never destroys the only copy. The result is exactly
-    * the table a from-scratch build over the survivors would produce
+    * touching an erased id and the sidecar rows, each table rewritten
+    * by [[ManagedTable.replace]] (write-then-swap, partitioning kept)
+    * so a failure mid-erasure never destroys the only copy. The result
+    * is exactly the table a from-scratch build over the survivors would produce
     * (pairs are per-edge rows — no aggregate to decrement). Works for
     * plain and grouped tables (extra columns carry through). */
   def removeFromPairTable(spark: org.apache.spark.sql.SparkSession,
                           table: String, ids: DataFrame,
                           idCol: String): Unit = {
     val del = ids.select(col(idCol).as("__del_id"))
-    def swap(t: String, survivors: DataFrame): Unit = {
-      val tmp = t + "_swap"
-      Lexical.dropManaged(spark, tmp)
-      val part = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-        .partitionColumnNames
-      val w = survivors.write.mode("overwrite").format("parquet")
-      (if (part.nonEmpty) w.partitionBy(part: _*) else w).saveAsTable(tmp)
-      Lexical.dropManaged(spark, t)
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $t")
-    }
-    swap(table, spark.table(table)
+    ManagedTable.replace(spark, table, spark.table(table)
       .join(broadcast(del), col("doc_id1") === col("__del_id"), "left_anti")
       .join(broadcast(del), col("doc_id2") === col("__del_id"), "left_anti"))
-    swap(s"${table}_toks", spark.table(s"${table}_toks")
+    ManagedTable.replace(spark, s"${table}_toks", spark.table(s"${table}_toks")
       .join(broadcast(del), col("id") === col("__del_id"), "left_anti"))
   }
 
@@ -1582,28 +1550,17 @@ object Dedup {
   /** Delete ids from a persisted signature table — the dedup-at-ingest
     * erasure path (an erased document must stop matching future ingest
     * probes, or its content leaks through dedup decisions). Anti-join
-    * + rewrite; the rewrite also compacts the one-file-per-append
-    * layout into the scan's read splits. Refuses to empty the table
-    * (that's a drop, not a delete). */
+    * + [[ManagedTable.replace]] (write-then-swap, so a failed delete
+    * never destroys the only copy of the ingest state); the rewrite
+    * also compacts the one-file-per-append layout into the scan's read
+    * splits. Refuses to empty the table (that's a drop, not a delete). */
   def removeSignatures(spark: org.apache.spark.sql.SparkSession,
                        table: String, ids: DataFrame, idCol: String): Unit = {
     val del = ids.select(col(idCol).as("id"))
-    val survivors = spark.table(table)
-      .join(broadcast(del), Seq("id"), "left_anti")
-    // write-then-swap: survivors materialize into a sibling table
-    // BEFORE anything is dropped, so a driver/executor loss mid-run
-    // never destroys the only copy of the ingest state (the rename is
-    // a metadata+directory move, not a data rewrite)
-    val tmp = table + "_swap"
-    Lexical.dropManaged(spark, tmp) // stale leftover from a dead run
-    survivors.write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    if (spark.table(tmp).limit(1).count() == 0L) {
-      Lexical.dropManaged(spark, tmp)
-      throw new IllegalArgumentException(
-        s"delete batch covers every id in $table — drop the table instead")
-    }
-    Lexical.dropManaged(spark, table)
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
+    ManagedTable.replace(spark, table,
+      spark.table(table).join(broadcast(del), Seq("id"), "left_anti"),
+      check = swap => require(swap.limit(1).count() > 0L,
+        s"delete batch covers every id in $table — drop the table instead"))
   }
 
   /** Probe a persisted signature table with an incoming batch. */
@@ -1685,17 +1642,6 @@ object Dedup {
 
   // ---- L82c: containment-at-ingest state tables ----
 
-  private def containPostings(docs: DataFrame, idCol: String,
-                              textCol: String, shingleN: Int): DataFrame = {
-    val setCol =
-      if (shingleN <= 1) token_id_set(tokenize_ws(col(textCol)))
-      else shingle_id_set(tokenize_ws(col(textCol)), shingleN)
-    docs.select(col(idCol).as("corpus_id"), setCol.as("ids"))
-      .filter(size(col("ids")) >= 1)
-      .select(col("corpus_id"), explode(col("ids")).as("sid"),
-        size(col("ids")).cast("long").as("csz"))
-  }
-
   private def containSets(docs: DataFrame, idCol: String,
                           textCol: String, shingleN: Int): DataFrame = {
     val setCol =
@@ -1708,16 +1654,25 @@ object Dedup {
   private def writeContainState(docs: DataFrame, idCol: String,
                                 textCol: String, table: String,
                                 shingleN: Int, buckets: Int,
-                                mode: String): Unit = {
-    if (mode == "overwrite") {
-      Lexical.dropManaged(docs.sparkSession, table)
-      Lexical.dropManaged(docs.sparkSession, s"${table}_sets")
-    }
-    containPostings(docs, idCol, textCol, shingleN)
-      .write.mode(mode).bucketBy(buckets, "sid")
+                                mode: String): Unit =
+    writeProbeState(containSets(docs, idCol, textCol, shingleN),
+      sets => sets.select(col("corpus_id"), explode(col("ids")).as("sid"),
+        size(col("ids")).cast("long").as("csz")),
+      "sid", table, buckets, mode)
+
+  /** One writer for the ingest probe states (containment, winnow):
+    * `sets` (corpus_id, set) goes to the `<table>_sets` verify
+    * sidecar bucketed on corpus_id, and `postings(sets)`, one row per
+    * set member keyed by `key`, to the probe table `<table>` bucketed
+    * on `key`. Overwrite drops both tables first. */
+  private def writeProbeState(sets: DataFrame, postings: DataFrame => DataFrame,
+                              key: String, table: String, buckets: Int,
+                              mode: String): Unit = {
+    if (mode == "overwrite") Seq(table, s"${table}_sets")
+      .foreach(ManagedTable.drop(sets.sparkSession, _))
+    postings(sets).write.mode(mode).bucketBy(buckets, key)
       .format("parquet").saveAsTable(table)
-    containSets(docs, idCol, textCol, shingleN)
-      .write.mode(mode).bucketBy(buckets, "corpus_id")
+    sets.write.mode(mode).bucketBy(buckets, "corpus_id")
       .format("parquet").saveAsTable(s"${table}_sets")
   }
 
@@ -1976,19 +1931,11 @@ object Dedup {
 
   private def writeWinnowState(docs: DataFrame, idCol: String,
                                textCol: String, table: String, k: Int,
-                               w: Int, buckets: Int, mode: String): Unit = {
-    if (mode == "overwrite") {
-      Lexical.dropManaged(docs.sparkSession, table)
-      Lexical.dropManaged(docs.sparkSession, s"${table}_sets")
-    }
-    val sets = winnowSets(docs, idCol, textCol, k, w)
-    sets.select(col("doc_id").as("corpus_id"), explode(col("fps")).as("fp"))
-      .write.mode(mode).bucketBy(buckets, "fp")
-      .format("parquet").saveAsTable(table)
-    sets.select(col("doc_id").as("corpus_id"), col("fps"))
-      .write.mode(mode).bucketBy(buckets, "corpus_id")
-      .format("parquet").saveAsTable(s"${table}_sets")
-  }
+                               w: Int, buckets: Int, mode: String): Unit =
+    writeProbeState(
+      winnowSets(docs, idCol, textCol, k, w).withColumnRenamed("doc_id", "corpus_id"),
+      sets => sets.select(col("corpus_id"), explode(col("fps")).as("fp")),
+      "fp", table, buckets, mode)
 
   /** Persist the corpus's winnow-probe state: an inverted fingerprint
     * postings table `<table>` (fp, corpus_id) bucketed on the probe

@@ -19,59 +19,67 @@ import graft.functions._
   *    shuffle at build);
   *  - `<t>_termdf` (term, df): per-term document frequencies;
   *  - `<t>_stats`: one row (n_docs, sum_dl).
-  * Scoring replicates the rational-idf BM25 of `q_bm25` bit-exactly,
-  * so the from-index search hash-matches the from-scratch oracle.
+  * [[appendDocs]] and [[deleteDocs]] rewrite tables only through
+  * [[ManagedTable.replace]] (write-then-swap), so a failed maintenance
+  * call never drops the only copy of a table. Scoring replicates the
+  * rational-idf BM25 of `q_bm25` bit-exactly, so the from-index search
+  * hash-matches the from-scratch oracle.
   */
 object Lexical {
 
-  /** Drop a managed table AND its warehouse directory: a fresh session
-    * (new in-memory catalog) over an old warehouse dir would otherwise
-    * hit LOCATION_ALREADY_EXISTS on the first rebuild. Shared with the
-    * other build-once/probe-many writers (Dedup pair/signature tables). */
-  private[graft] def dropManaged(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
-
   private val Parts = Seq("postings", "doclen", "termdf", "stats")
 
-  def buildIndex(docs: DataFrame, idCol: String, textCol: String,
-                 table: String, buckets: Int = 32): Unit = {
-    Parts.foreach(p => dropManaged(docs.sparkSession, s"${table}_$p"))
+  /** The positional postings (term, doc_id, tf, positions) and doc
+    * lengths (doc_id, dl) of a document frame: 1-based token positions
+    * per (term, doc) — tf is their count, phrase search intersects
+    * adjacent positions. */
+  private def postingsAndLengths(docs: DataFrame, idCol: String,
+                                 textCol: String): (DataFrame, DataFrame) = {
     val toks = docs.select(col(idCol).as("doc_id"),
       tokenize_ws(col(textCol)).as("toks"))
-    val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-    // positional postings: 1-based token positions per (term, doc) —
-    // tf is their count, phrase search intersects adjacent positions
     val tf = toks.select(col("doc_id"), posexplode(col("toks")))
       .select(col("doc_id"), col("col").as("term"), (col("pos") + 1).as("p"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("p"))).as("positions"))
+    (tf, toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl")))
+  }
+
+  /** The derived tables by part name: `termdf` aggregates the
+    * COMMITTED postings, `stats` the committed doclen — never the
+    * upstream frame, so the corpus is tokenized exactly twice (postings
+    * + doclen writes) and maintenance never rescans it. */
+  private def derived(spark: SparkSession, table: String): Seq[(String, DataFrame)] = Seq(
+    "termdf" -> spark.table(s"${table}_postings")
+      .groupBy("term").agg(count(lit(1)).as("df")),
+    "stats" -> spark.table(s"${table}_doclen")
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
+
+  private def replaceDerived(spark: SparkSession, table: String): Unit =
+    derived(spark, table).foreach { case (p, rows) =>
+      ManagedTable.replace(spark, s"${table}_$p", rows)
+    }
+
+  def buildIndex(docs: DataFrame, idCol: String, textCol: String,
+                 table: String, buckets: Int = 32): Unit = {
+    val spark = docs.sparkSession
+    Parts.foreach(p => ManagedTable.drop(spark, s"${table}_$p"))
+    val (tf, dl) = postingsAndLengths(docs, idCol, textCol)
     tf.write.mode("overwrite").bucketBy(buckets, "term").sortBy("term")
       .format("parquet").saveAsTable(s"${table}_postings")
     dl.write.mode("overwrite").bucketBy(buckets, "doc_id")
       .format("parquet").saveAsTable(s"${table}_doclen")
-    val spark = docs.sparkSession
-    // both derived tables aggregate the COMMITTED tables, not the
-    // upstream frame — the corpus is tokenized exactly twice (postings
-    // + doclen writes), never a third time for stats
-    spark.table(s"${table}_postings")
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_termdf")
-    spark.table(s"${table}_doclen")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_stats")
+    derived(spark, table).foreach { case (p, rows) =>
+      rows.write.mode("overwrite").format("parquet").saveAsTable(s"${table}_$p")
+    }
   }
 
   /** Incremental index maintenance: append a batch's postings and doc
     * lengths (same bucket layout the build used — appends land in the
     * matching buckets), then rebuild the derived term-df and stats
     * tables FROM the committed postings/doclen (aggregates over the
-    * index, never a corpus rescan). After the append, searches see the
-    * union corpus exactly as a full rebuild would. */
+    * index, never a corpus rescan) by [[ManagedTable.replace]]. After
+    * the append, searches see the union corpus exactly as a full
+    * rebuild would. */
   def appendDocs(docs: DataFrame, idCol: String, textCol: String,
                  table: String, buckets: Int = 32): Unit = {
     val spark = docs.sparkSession
@@ -87,31 +95,12 @@ object Lexical {
       s"appendDocs batch contains doc ids already in $table " +
         s"(${dup.mkString(", ")}${if (dup.length == 5) ", ..." else ""}) " +
         "— searches would diverge from a rebuild; dedup the batch first")
-    val toks = docs.select(col(idCol).as("doc_id"),
-      tokenize_ws(col(textCol)).as("toks"))
-    toks.select(col("doc_id"), posexplode(col("toks")))
-      .select(col("doc_id"), col("col").as("term"), (col("pos") + 1).as("p"))
-      .groupBy("term", "doc_id")
-      .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("p"))).as("positions"))
-      .write.mode("append").bucketBy(buckets, "term").sortBy("term")
+    val (tf, dl) = postingsAndLengths(docs, idCol, textCol)
+    tf.write.mode("append").bucketBy(buckets, "term").sortBy("term")
       .format("parquet").saveAsTable(s"${table}_postings")
-    toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      .write.mode("append").bucketBy(buckets, "doc_id")
+    dl.write.mode("append").bucketBy(buckets, "doc_id")
       .format("parquet").saveAsTable(s"${table}_doclen")
-    // derived tables rebuild from the committed index. Materialize the
-    // aggregate BEFORE dropping its target (never read-while-overwrite);
-    // a crash between drop and write loses only derived data that the
-    // next appendDocs/buildIndex recomputes from the postings
-    val df2 = spark.table(s"${table}_postings")
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .transform(graft.operators.Lineage.pin)
-    dropManaged(spark, s"${table}_termdf")
-    df2.write.mode("overwrite").format("parquet").saveAsTable(s"${table}_termdf")
-    val st2 = spark.table(s"${table}_doclen")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .transform(graft.operators.Lineage.pin)
-    dropManaged(spark, s"${table}_stats")
-    st2.write.mode("overwrite").format("parquet").saveAsTable(s"${table}_stats")
+    replaceDerived(spark, table)
   }
 
   /** Index-lifecycle deletion: drop a batch of doc ids from the
@@ -127,44 +116,22 @@ object Lexical {
     * amortize-the-rewrite economics as queue compaction). A workload
     * needing frequent row-level erasure at 100 TB wants a tombstone
     * table consulted at probe time instead, at the price of an
-    * anti-join on every search. Unknown ids are a no-op. The rewrite
-    * reads the bucket count from the CATALOG, not a parameter — a
-    * caller-supplied count that disagreed with the build would
-    * silently re-bucket the index (drop+recreate bypasses the
-    * append-path bucket validation) and break later appendDocs. */
+    * anti-join on every search. Unknown ids are a no-op. Each table is
+    * rewritten by [[ManagedTable.replace]], which takes the bucket
+    * layout from the CATALOG, not a parameter — a caller-supplied
+    * count that disagreed with the build would silently re-bucket the
+    * index and break later appendDocs — and swaps only after the new
+    * rows are committed, so a failed delete loses no table, and
+    * repeating it completes it (an id already gone is a no-op). */
   def deleteDocs(spark: SparkSession, table: String, ids: DataFrame,
                  idCol: String): Unit = {
-    def bucketsOf(t: String): Int = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$t is not bucketed"))
-    val pBuckets = bucketsOf(s"${table}_postings")
-    val dBuckets = bucketsOf(s"${table}_doclen")
     val del = ids.select(col(idCol).as("doc_id"))
-    // materialize the survivors BEFORE dropping their source tables
-    // (never read-while-overwrite — same discipline as appendDocs)
-    val p2 = spark.table(s"${table}_postings")
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .transform(graft.operators.Lineage.pin)
-    val d2 = spark.table(s"${table}_doclen")
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .transform(graft.operators.Lineage.pin)
-    dropManaged(spark, s"${table}_postings")
-    p2.write.mode("overwrite").bucketBy(pBuckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(s"${table}_postings")
-    dropManaged(spark, s"${table}_doclen")
-    d2.write.mode("overwrite").bucketBy(dBuckets, "doc_id")
-      .format("parquet").saveAsTable(s"${table}_doclen")
-    val df2 = spark.table(s"${table}_postings")
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .transform(graft.operators.Lineage.pin)
-    dropManaged(spark, s"${table}_termdf")
-    df2.write.mode("overwrite").format("parquet").saveAsTable(s"${table}_termdf")
-    val st2 = spark.table(s"${table}_doclen")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .transform(graft.operators.Lineage.pin)
-    dropManaged(spark, s"${table}_stats")
-    st2.write.mode("overwrite").format("parquet").saveAsTable(s"${table}_stats")
+    Seq("postings", "doclen").foreach { p =>
+      val t = s"${table}_$p"
+      ManagedTable.replace(spark, t,
+        spark.table(t).join(broadcast(del), Seq("doc_id"), "left_anti"))
+    }
+    replaceDerived(spark, table)
   }
 
   /** Shared BM25 contribution pipeline: postings restricted to the

@@ -82,6 +82,44 @@ class EraseSpec extends SparkSpec {
     assert(got == expected, "erased counts ≡ never-ingested counts")
   }
 
+  test("erase removes the ids from the containment and winnow ingest state") {
+    val docs = table("documents").select("doc_id", "text").localCheckpoint(true)
+    val erased = Seq(3L, 7L, 11L)
+    val survivors = docs.filter(!col("doc_id").isin(erased: _*))
+    val (ct, wt) = ("erase_spec_contain", "erase_spec_winnow")
+    val (ctRef, wtRef) = ("erase_spec_contain_ref", "erase_spec_winnow_ref")
+    // every document's copy under a fresh id: each one fully contains,
+    // and shares every fingerprint with, its original
+    val probe = docs.select(col("doc_id") + 100000L as "doc_id", col("text"))
+    def contained(t: String) = Dedup.containedAgainstTable(probe, "doc_id", "text", t,
+        num = 9, den = 10)
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def winnowed(t: String) = Dedup.winnowAgainstTable(probe, "doc_id", "text", t,
+        minShared = 2L)
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def corpusIds(hits: Seq[Seq[Any]]) = hits.map(_(1).asInstanceOf[Long]).toSet
+    try {
+      Dedup.buildContainTable(docs, "doc_id", "text", ct)
+      Dedup.buildWinnowTable(docs, "doc_id", "text", wt)
+      assert(erased.toSet.subsetOf(corpusIds(contained(ct))), "containment hits before erase")
+      assert(erased.toSet.subsetOf(corpusIds(winnowed(wt))), "winnow hits before erase")
+
+      Erase.erase(spark, erased.toDF("doc_id"), "doc_id",
+        Erase.Surfaces(containTable = Some(ct), winnowTable = Some(wt)))
+
+      Dedup.buildContainTable(survivors, "doc_id", "text", ctRef)
+      Dedup.buildWinnowTable(survivors, "doc_id", "text", wtRef)
+      val (c, w) = (contained(ct), winnowed(wt))
+      assert((corpusIds(c) ++ corpusIds(w)).intersect(erased.toSet).isEmpty,
+        "an erased doc must stop matching containment and winnow probes")
+      assert(c == contained(ctRef), "erased containment state ≡ a build over the survivors")
+      assert(w == winnowed(wtRef), "erased winnow state ≡ a build over the survivors")
+    } finally Seq(ct, wt, ctRef, wtRef).foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_sets")
+    }
+  }
+
   test("removeSignatures erases ids from a table grown by several appends") {
     val docs = table("documents").select("doc_id", "text").localCheckpoint(true)
     val sig = "erase_spec_sig_appended"

@@ -54,6 +54,46 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (out, got.result())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result, with every Spark file write into one of the
+    * managed `tables` (or its `<t>_swap` sibling) failing at job commit,
+    * after its tasks have written: the failure a cancelled job or a
+    * lost commit leaves. Writes elsewhere commit as usual. */
+  def failingCommitsTo[T](tables: String*)(body: => T): T = {
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prev = spark.conf.getOption(key)
+    FailingCommitProtocol.armed = tables.map(_.toLowerCase).toSet
+    spark.conf.set(key, classOf[FailingCommitProtocol].getName)
+    try body finally {
+      FailingCommitProtocol.armed = Set.empty
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  /** Whether `e` or one of its causes is a [[FailingCommitProtocol]] failure. */
+  def isInjectedCommitFailure(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == FailingCommitProtocol.Message)
+}
+
+/** The default SQL commit protocol, except that a job whose output
+  * directory is named after an armed table (or its `_swap` sibling)
+  * throws in `commitJob`; see [[SparkSpec.failingCommitsTo]]. */
+class FailingCommitProtocol(jobId: String, outPath: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, outPath, dynamicPartitionOverwrite) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+                         taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
+    val name = new org.apache.hadoop.fs.Path(outPath).getName.toLowerCase
+    if (FailingCommitProtocol.armed.exists(t => name == t || name == s"${t}_swap"))
+      throw new java.io.IOException(FailingCommitProtocol.Message)
+    super.commitJob(job, taskCommits)
+  }
+}
+
+object FailingCommitProtocol {
+  val Message = "injected job-commit failure"
+  @volatile private[graft] var armed: Set[String] = Set.empty
 }
 
 object SparkSpec {
